@@ -4,8 +4,10 @@
 file, so a checkout builds once and reuses the jar afterwards.
 
 The build also dumps a class-data-sharing archive (`app.jsa`) from one
-short harness run. Runs map it at JVM start, which takes Spark's class
-loading (several seconds per JVM) out of every run's set-up.
+short harness run. Every run maps it at JVM start (`-Xshare:on`: a JVM
+that cannot map it exits instead of loading classes the ordinary way),
+which takes Spark's class loading (several seconds per JVM) out of every
+run's set-up. A failed dump fails the build, so there is one run path.
 
 The compiler and the Spark runtime both come from the jar directory the
 program's own `build.sbt` names as `unmanagedBase` (falling back to
@@ -51,8 +53,8 @@ class Build:
         cmd = ["java"]
         for p in OPENS:
             cmd += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
-        if not extra and os.path.exists(self.jsa):
-            cmd.append(f"-XX:SharedArchiveFile={self.jsa}")
+        if not extra:
+            cmd += [f"-XX:SharedArchiveFile={self.jsa}", "-Xshare:on"]
         # -XX:-UsePerfData: no hsperfdata file in the system temp directory
         return cmd + list(extra) + [
             "-XX:-UsePerfData",
@@ -73,8 +75,8 @@ def _jar(classes, jar):
 
 def _dump_archive(b):
     """The harness's self-test (a small Spark SQL session) writes the
-    class-data-sharing archive; classes it did not load, and every class
-    when there is no archive, load the ordinary way."""
+    class-data-sharing archive; classes it did not load load the
+    ordinary way."""
     work = os.path.join(os.path.dirname(b.jar), "dump")
     os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
     cmd = b.java(work, [f"-XX:ArchiveClassesAtExit={b.jsa}"],
@@ -82,8 +84,9 @@ def _dump_archive(b):
     with open(os.path.join(BUILD_DIR, "cds-dump.log"), "w") as dump_log:
         r = subprocess.run(cmd, stdout=dump_log, stderr=dump_log, timeout=300)
     shutil.rmtree(work, ignore_errors=True)
-    if r.returncode != 0 and os.path.exists(b.jsa):
-        os.remove(b.jsa)
+    if r.returncode != 0 or not os.path.exists(b.jsa):
+        raise BuildError(f"class-data-sharing dump exited with {r.returncode}; "
+                         "log: .bench_build/cds-dump.log")
 
 
 def jar_dir(root=ROOT):
@@ -143,7 +146,11 @@ def build(root=ROOT, log=sys.stderr):
         _jar(classes, b.jar)
         shutil.rmtree(classes)
         print("perfbench: dumping the class-data-sharing archive", file=log, flush=True)
-        _dump_archive(b)
+        try:
+            _dump_archive(b)
+        except BaseException:
+            shutil.rmtree(out, ignore_errors=True)
+            raise
         open(os.path.join(out, "BUILT"), "w").close()
         for old in glob.glob(os.path.join(BUILD_DIR, "build-*")):
             if old != out:

@@ -29,11 +29,9 @@ import oracle  # noqa: E402
 import stats  # noqa: E402
 import tables  # noqa: E402
 
-WORKLOADS = ("clip_pipeline", "dedup_corpus", "query_suite")
-JVM_TIMEOUT_S = 165
-# the dedup_minhash_lsh oracle reproduces every MinHash bit in SQL and
-# takes ~25 s in DuckDB on a 4-core host: traced runs only
-SLOW_ORACLES = {"dedup_minhash_lsh"}
+WORKLOADS = ("clip_pipeline", "dedup_corpus")
+# a run has 180 s; a traced dedup_corpus run adds ~25 s of DuckDB oracles
+JVM_TIMEOUT_S = 150
 
 
 def run_jvm(b, args, work, log_path):
@@ -51,8 +49,7 @@ def run_jvm(b, args, work, log_path):
 def end_to_end(r, wall):
     s = r["setup"]
     setup = s["boot_s"] + s["session_s"] + s["models_s"] + \
-        stats.median(s["inputs_s"]) + s["warmup_s"] + \
-        (stats.median(s["prep_s"]) if s["prep_s"] else 0.0)
+        stats.median(s["inputs_s"]) + s["warmup_s"]
     return {
         "setup_s": setup,
         "wall_s": wall,
@@ -80,12 +77,10 @@ def main(argv=None):
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(work, "tmp"))
     out_json = os.path.join(work, "result.json")
-    prep = []
-    if a.workload == "query_suite":
-        for _ in range(3):  # timed like the harness's input builds
-            t = time.time()
-            tables.write(a.seed, os.path.join(work, "tables"))
-            prep.append(time.time() - t)
+    # the catalog layer runs in dedup_corpus traced runs, over these tables
+    catalog = a.trace and a.workload == "dedup_corpus"
+    if catalog:
+        tables.write(a.seed, os.path.join(work, "tables"))
     log_path = os.path.join(build.BUILD_DIR, f"last-{a.workload}.log")
     try:
         t0 = time.time()
@@ -103,17 +98,18 @@ def main(argv=None):
             with open(os.path.join(build.BUILD_DIR, f"spans-{a.workload}-{a.seed}.json"), "w") as f:
                 json.dump(r["spans"], f)
         jvm_s = time.time() - t0
-        r["setup"]["prep_s"] = prep
-        if prep:
-            r["input_digest"] = tables.digest(os.path.join(work, "tables"))
-            r["input_rows"] = sum(tables.ROWS.values())
+        # -Xshare:on: a JVM that ran has mapped the archive
+        r["jvm"] = (f"class-data-sharing archive {os.path.relpath(b.jsa, ROOT)} mapped, "
+                    f"heap {build.HEAP}")
+        if catalog:
+            r["catalog_desc"] = (f"{len(r['catalog_ops'])} catalog queries over 10 tables "
+                                 f"at sf0.01 row counts ({sum(tables.ROWS.values())} rows), "
+                                 f"digest {tables.digest(os.path.join(work, 'tables'))}")
         checks = list(r["checks"])
-        oracles = {q: sql for q, sql in r["oracles"].items()
-                   if a.trace or q not in SLOW_ORACLES}
-        if oracles:
+        if r["oracles"]:
             for q, (ok, detail) in oracle.compare(
                     os.path.join(work, "tables"), os.path.join(work, "oracle_out"),
-                    oracles).items():
+                    r["oracles"]).items():
                 checks.append({"name": f"oracle:{q}", "ok": ok, "value": float(ok),
                                "ops": [q], "detail": detail})
         elapsed = (jvm_s, time.time() - t0 - jvm_s)
@@ -140,14 +136,16 @@ def report(a, spec, r, checks, elapsed):
     wall = stats.median(plain) if plain else 0.0  # no unit completed: correct is false
     e2e = end_to_end(r, wall)
 
+    catalog_ops = set(r["catalog_ops"])
     samples = [c["seconds"] for c in calls
-               if c["unit"] >= 0 and not c["traced"] and c["ok"]]
+               if c["op"] in catalog_ops and c["unit"] >= 0 and c["ok"]]
     qtail = stats.tail(samples)
     quality = {c["name"]: c["value"] for c in checks}
     w = a.workload
     lines = [
         f"perfbench {w} seed={a.seed} trace={a.trace} cores={r['cores']} "
-        f"jvm={elapsed[0]:.1f}s oracle={elapsed[1]:.1f}s",
+        f"jvm={elapsed[0]:.1f}s checks={r['checks_s']:.1f}s oracle={elapsed[1]:.1f}s",
+        f"  jvm: {r['jvm']}",
         f"  input: {r['input_desc']}",
         f"  input digest: {r['input_digest']}",
         f"  units: {len(plain)} untraced {[round(x, 3) for x in plain]}, "
@@ -156,12 +154,6 @@ def report(a, spec, r, checks, elapsed):
         f"  wall_s           {wall:.3f} s  (median of {len(plain)} units)",
         f"  rows_per_s       {e2e['rows_per_s']:.1f} 1/s  "
         f"({r['input_rows']} input rows)",
-        f"  query_p50_s      {stats.median(samples):.4f} s  ({len(samples)} calls)"
-        if samples else "  query_p50_s      n/a",
-        f"  query_p90_s      {qtail[1]:.4f} s  (p{qtail[0]:g}: highest percentile with "
-        f">=10 of {len(samples)} samples beyond it)"
-        if qtail else f"  query_p90_s      n/a ({len(samples)} samples: none beyond any "
-                      "percentile reaches 10)",
         f"  keep_f1          {quality['keep_f1']:.5f}" if "keep_f1" in quality
         else "  keep_f1          n/a",
         f"  planted_recall   {quality['planted_recall']:.5f}"
@@ -169,6 +161,16 @@ def report(a, spec, r, checks, elapsed):
         f"  cache_peak_mb    {r['cache_peak_mb']:.2f} MB",
         f"  failed_frac      {failed / max(1, attempted):.4f}  ({failed} of {attempted})",
     ]
+    if catalog_ops:
+        lines += [
+            f"  catalog: {r['catalog_desc']}",
+            f"  query_p50_s      {stats.median(samples):.4f} s  ({len(samples)} traced calls)"
+            if samples else "  query_p50_s      n/a",
+            f"  query_p90_s      {qtail[1]:.4f} s  (p{qtail[0]:g}: highest percentile with "
+            f">=10 of {len(samples)} samples beyond it)"
+            if qtail else f"  query_p90_s      n/a ({len(samples)} samples: none beyond any "
+                          "percentile reaches 10)",
+        ]
     per_op = {}
     for c in calls:
         if c["unit"] >= 0 and c["ok"]:

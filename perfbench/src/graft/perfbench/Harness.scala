@@ -64,6 +64,8 @@ abstract class Workload(val spark: SparkSession, val seed: Long,
   def unit(traced: Boolean): Unit
   /** Output checks on the last untraced unit. */
   def checks(): Unit
+  /** Name of the span around each unit. */
+  def unitName: String = "unit"
   /** Per-layer metrics from the traced units and a single-thread replay. */
   def layers(out: mutable.Map[String, Double], tracedUnits: Seq[Int]): Unit
   /** Fingerprints of outputs checked outside the JVM (op -> digest). */
@@ -82,6 +84,29 @@ abstract class Workload(val spark: SparkSession, val seed: Long,
   * untraced and a traced unit, which gives the tracing overhead. */
 object Harness {
   private def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+
+  /** Runs the catalog suite once, untimed, after a traced run's own
+    * layers: its warm-up, one traced pass (unit `firstUnit`) and its
+    * layer metrics. Only the `catalog.*` and `query.*` metrics are kept,
+    * so the run's engine and JVM totals stay those of its own units. */
+  private def catalogLayer(q: QuerySuite, tracer: Tracer, rec: Recorder,
+      firstUnit: Int, layers: mutable.Map[String, Double]): Unit = {
+    rec.unit = -1
+    rec.traced = false
+    try {
+      q.warmup()
+      rec.unit = firstUnit
+      rec.traced = true
+      tracer.enabled = true
+      tracer.span(q.unitName)(q.unit(traced = true))
+      tracer.drain()
+      val own = mutable.LinkedHashMap.empty[String, Double]
+      q.layers(own, Seq(firstUnit))
+      own.foreach { case (k, v) =>
+        if (k.startsWith("catalog.") || k.startsWith("query.")) layers(k) = v }
+    } catch { case _: UnitAborted => }
+    finally tracer.enabled = false
+  }
 
   def main(args: Array[String]): Unit = {
     val Array(workload, seedS, secondsS, traceS, workDir, outPath) = args
@@ -115,7 +140,6 @@ object Harness {
     val w: Workload = workload match {
       case "clip_pipeline" => new ClipPipeline(spark, seed, tracer, rec, workDir)
       case "dedup_corpus" => new DedupCorpus(spark, seed, tracer, rec, workDir)
-      case "query_suite" => new QuerySuite(spark, seed, tracer, rec, workDir)
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
     val inputS = mutable.ArrayBuffer.empty[Double]
@@ -141,7 +165,7 @@ object Harness {
       tracer.enabled = traced
       val u0 = System.nanoTime()
       val ok =
-        try { tracer.span("unit") { w.unit(traced) }; true }
+        try { tracer.span(w.unitName) { w.unit(traced) }; true }
         catch { case _: UnitAborted => false }
         finally tracer.enabled = false
       if (ok) units += ((units.size, traced, secs(u0)))
@@ -155,7 +179,9 @@ object Harness {
     } while (System.nanoTime() < deadline)
     val cachePeak = tracer.storagePeakBytes
 
+    t0 = System.nanoTime()
     w.checks()
+    val checksS = secs(t0)
     val layers = mutable.LinkedHashMap.empty[String, Double]
     if (trace) {
       tracer.enabled = true
@@ -164,6 +190,12 @@ object Harness {
       tracer.enabled = false
       layers("lid.models_load_s") = modelsS
     }
+    // the catalog layer rides in the dedup_corpus traced run
+    val catalog =
+      if (trace && workload == "dedup_corpus")
+        Some(new QuerySuite(spark, seed, tracer, rec, workDir))
+      else None
+    catalog.foreach(q => catalogLayer(q, tracer, rec, units.size, layers))
 
     val out = new java.util.LinkedHashMap[String, Any]()
     out.put("workload", workload)
@@ -177,6 +209,7 @@ object Harness {
     setup.put("models_s", modelsS); setup.put("inputs_s", Json.list(inputS.toSeq))
     setup.put("warmup_s", warmupS)
     out.put("setup", setup)
+    out.put("checks_s", checksS)
     out.put("units", Json.list(units.toSeq.map { case (i, t, s) =>
       Json.obj("unit" -> i, "traced" -> t, "seconds" -> s) }))
     out.put("calls", Json.list(rec.calls.toSeq.map(c => Json.obj(
@@ -186,8 +219,10 @@ object Harness {
       "name" -> c.name, "ok" -> c.ok, "value" -> c.value,
       "ops" -> Json.list(c.ops), "detail" -> c.detail))))
     out.put("cache_peak_mb", cachePeak / 1048576.0)
-    out.put("references", Json.obj(w.references.toSeq: _*))
-    out.put("oracles", Json.obj(w.oracles.toSeq: _*))
+    val parts = w +: catalog.toSeq
+    out.put("references", Json.obj(parts.flatMap(_.references.toSeq): _*))
+    out.put("oracles", Json.obj(parts.flatMap(_.oracles.toSeq): _*))
+    out.put("catalog_ops", Json.list(catalog.toSeq.flatMap(_ => QuerySuite.Suite)))
     val lm = new java.util.LinkedHashMap[String, Any]()
     layers.foreach { case (k, v) => lm.put(k, v) }
     out.put("layers", lm)

@@ -1,5 +1,5 @@
-"""Input tables of the `query_suite` workload: the ten TPC-H-like tables
-the query catalog reads, at the row counts of scale factor 0.01, drawn
+"""Input tables of the catalog layer, which `dedup_corpus` traced runs
+measure: the ten TPC-H-like tables the query catalog reads, at the row counts of scale factor 0.01, drawn
 from the seed. Columns are independent and uniform over the value
 domains of the catalog's fixtures, and the files have the same physical
 types (pyarrow writer: int64 keys, timestamp[us], list<float>)."""
