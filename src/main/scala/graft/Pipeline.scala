@@ -7,12 +7,14 @@ import graft.operators._
 
 /** End-to-end quality-filter pipeline (SURVEY.md §7.3):
   * clips → stage1 (decode + LID + ppl) → stage1b (per-source stats,
-  * the ONE shuffle) → stage2 (broadcast-join cascade + keep/drop) →
-  * stage3 (scrub).
+  * one job) → stage2 (broadcast-join cascade + keep/drop) → stage3
+  * (scrub).
   *
   * Scale notes: the data path is scan → narrow map (stage1) → narrow map
-  * (stage2) → filter+map (stage3). The only exchange is the stats
-  * aggregation on the stage-1 output, which ships counters, not rows.
+  * (stage2) → filter+map (stage3), with no exchange. The stats are a
+  * `treeAggregate` of per-partition counter bundles over the stage-1
+  * output: it ships counters, never rows (through one foldByKey level
+  * beyond 5 partitions).
   * At 10^12 rows the stage-1 output would be persisted as hash-bucketed
   * parquet between runs (see lineage.Checkpoint); here the fused plan is
   * used, with stage1 cached only when both 1b and 2 need it.

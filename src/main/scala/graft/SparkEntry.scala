@@ -147,11 +147,11 @@ object SparkEntry {
     })
   }
 
-  // Session-keyed broadcast cache: the model-backed queries (lang
-  // segments, ppl buckets, BPE) used to create a FRESH Broadcast of the
-  // model bundle on every invocation and never destroy it — a long
-  // session accumulated undestroyed broadcast blocks. One broadcast per
-  // (session, key) matches Stage1's broadcast-once pattern. Same
+  // Session-keyed broadcast cache: the model-backed queries (ppl
+  // buckets, BPE) used to create a FRESH Broadcast of their model on
+  // every invocation and never destroy it — a long session accumulated
+  // undestroyed broadcast blocks. One broadcast per (session, key); the
+  // whole detector bundle is Stage1.modelsBc, one per SparkContext. Same
   // weak-key + isStopped-eviction discipline as pipeCache.
   private val bcCache = new java.util.WeakHashMap[SparkSession,
     scala.collection.mutable.HashMap[String, Any]]()
@@ -1147,8 +1147,7 @@ object SparkEntry {
       // ungated, 29% with a one-detector prob gate, 1% gated on
       // agreement (measured at sf0.001).
       import s.implicits._
-      val bc = cachedBc(s, "models")(
-        s.sparkContext.broadcast(graft.lid.LidModels.default))
+      val bc = graft.operators.Stage1.modelsBc(s.sparkContext)
       // fanOut: the detector map is the expensive pass and the fixture
       // parquet plans as one scan task — see Dedup.fanOut
       Dedup.fanOut(t(s, d, "documents").select(col("doc_id"), col("text")))

@@ -1,10 +1,12 @@
 package graft.apps
 
-import graft.lid.{LangCorpus, LidModels}
+import graft.lid.{LangCorpus, LidModels, LidText}
 
 /** Single-thread per-detector microbenchmark (tuning tool): ms per 20k
-  * transcripts for each ensemble member + the char LM — the same
-  * protocol the r1 hot-loop optimizations were measured with.
+  * transcripts for each ensemble member + the char LM, each through its
+  * own `predict`, then the shared per-row path `Stage1.processClip`
+  * takes — the same protocol the r1 hot-loop optimizations were
+  * measured with.
   * Usage: scripts/run.sh graft.apps.ProfileDetectors [n] [reps]
   */
 object ProfileDetectors {
@@ -30,8 +32,10 @@ object ProfileDetectors {
     }
     m.systems.foreach { case (name, d) => time(name)(d.predict) }
     time("char_lm ppl")(m.charLm.perplexity)
+    // the stage-1 per-row path: one normalization scored by all members
     time("ALL (stage1 LID+ppl)") { t =>
-      m.systems.foreach(_._2.predict(t)); m.charLm.perplexity(t)
+      val in = new LidText(t)
+      m.systems.foreach(_._2.score(in)); m.charLm.perplexity(in)
     }
   }
 }

@@ -23,14 +23,126 @@ import scala.util.Random
   */
 trait LangDetector extends Serializable {
   /** (lang, prob) sorted by prob desc then lang asc; pruned per-detector. */
-  def predict(text: String): Array[(String, Double)]
+  final def predict(text: String): Array[(String, Double)] = score(new LidText(text))
+
+  /** `predict` over a row normalized once for the whole ensemble. */
+  def score(in: LidText): Array[(String, Double)]
+}
+
+/** One row's text normalization, shared by every ensemble member and the
+  * char LM: `Stage1.processClip` builds one per gated row, each
+  * `predict(text)` builds its own. Each part is computed on first use,
+  * so a lone detector pays only for what it reads. One instance per row;
+  * not for concurrent use. */
+final class LidText(val text: String) {
+  private var lower0: String = _
+  private var padded0: String = _
+  private var ftText0: String = _
+  private var ftHashes0: Array[Int] = _
+
+  /** `text.toLowerCase`: the NB, prototype and char-LM input. */
+  def lower: String = {
+    if (lower0 == null) lower0 = text.toLowerCase
+    lower0
+  }
+
+  /** `\u0001 + lower + \u0001`: the rank profiles' input. */
+  def padded: String = {
+    if (padded0 == null) padded0 = LidText.Pad + lower + LidText.Pad
+    padded0
+  }
+
+  /** fastText input: ASCII digits stripped BEFORE lowercasing (LI:183-184;
+    * lowercasing is context-sensitive, e.g. Greek final sigma next to a
+    * digit), padded like `padded` — which it is when there is no digit. */
+  def ftText: String = {
+    if (ftText0 == null) {
+      val stripped = TextStats.stripDigits(text)
+      ftText0 = if (stripped eq text) padded
+        else LidText.Pad + stripped.toLowerCase + LidText.Pad
+    }
+    ftText0
+  }
+
+  /** Raw 31-bit FNV-1a hashes of `ftText`'s char 1..4-grams, all 1-grams
+    * first, then all 2-grams, and so on; `impresso_ft` and `wp_ft` share
+    * this one pass and each masks it to its own dim. FNV-1a extends one char at a
+    * time, so the order-(n+1) hash at position i is one step past the
+    * order-n hash at i: the hash rolls per start position (4L char steps
+    * instead of ~10L). */
+  def ftHashes: Array[Int] = {
+    if (ftHashes0 == null) {
+      val t = ftText
+      val L = t.length
+      var total = 0
+      var n = 1
+      while (n <= 4) { if (L >= n) total += L - n + 1; n += 1 }
+      val out = new Array[Int](total)
+      val off2 = L // block offsets: the n-gram block starts after all
+      val off3 = off2 + math.max(L - 1, 0) // shorter blocks
+      val off4 = off3 + math.max(L - 2, 0)
+      var i = 0
+      while (i < L) {
+        var h = 0x811c9dc5
+        h ^= t.charAt(i); h *= 0x01000193
+        out(i) = h & 0x7fffffff
+        if (i + 2 <= L) {
+          h ^= t.charAt(i + 1); h *= 0x01000193
+          out(off2 + i) = h & 0x7fffffff
+          if (i + 3 <= L) {
+            h ^= t.charAt(i + 2); h *= 0x01000193
+            out(off3 + i) = h & 0x7fffffff
+            if (i + 4 <= L) {
+              h ^= t.charAt(i + 3); h *= 0x01000193
+              out(off4 + i) = h & 0x7fffffff
+            }
+          }
+        }
+        i += 1
+      }
+      ftHashes0 = out
+    }
+    ftHashes0
+  }
+}
+
+object LidText {
+  // written as an escape: a raw control-char literal renders as ""
+  private val Pad = "\u0001"
 }
 
 object Detectors {
-  /** Deterministic tie-break contract (SURVEY.md §2.9 step 8):
-    * score desc, then lexicographically smallest language. */
-  def sortPreds(m: Iterable[(String, Double)]): Array[(String, Double)] =
-    m.toArray.sortBy { case (l, p) => (-p, l) }
+  /** Deterministic tie-break contract (SURVEY.md §2.9 step 8): the
+    * class indices by score desc, then lexicographically smallest
+    * language — `langs.zip(p).sortBy { case (l, p) => (-p, l) }`, as an
+    * insertion sort of the <= 5 classes with no tuple boxed. */
+  def sortPreds(langs: IndexedSeq[String], p: Array[Double]): Array[Int] = {
+    val ix = new Array[Int](p.length)
+    var i = 0
+    while (i < p.length) {
+      var j = i - 1
+      while (j >= 0 && {
+        val c = java.lang.Double.compare(-p(i), -p(ix(j)))
+        c < 0 || (c == 0 && langs(i) < langs(ix(j)))
+      }) { ix(j + 1) = ix(j); j -= 1 }
+      ix(j + 1) = i
+      i += 1
+    }
+    ix
+  }
+
+  /** A detector's output: `(lang, prob)` in `sortPreds` order while
+    * `prob > floor`, at most `maxN`, each prob rounded to `digits`. The
+    * probs come from a softmax or a normalization, so they are never NaN
+    * and never above 1: the entries above `floor` are a prefix of the
+    * order, and a `min(1, ·)` clamp would be a no-op. */
+  def preds(langs: IndexedSeq[String], p: Array[Double], floor: Double,
+      maxN: Int, digits: Int): Array[(String, Double)] = {
+    val ix = sortPreds(langs, p)
+    var n = 0
+    while (n < math.min(maxN, ix.length) && p(ix(n)) > floor) n += 1
+    Array.tabulate(n)(i => (langs(ix(i)), TextStats.roundTo(p(ix(i)), digits)))
+  }
 
   def softmax(scores: Array[Double]): Array[Double] = {
     val mx = scores.max
@@ -52,6 +164,40 @@ object Detectors {
   }
 }
 
+/** Read-only open-addressed table from a non-zero packed-gram key to a
+  * slot: the model tables keep their per-class payload flat in a
+  * primitive array at `slot * k`, so a gram lookup is one probe and no
+  * boxed key or per-gram array. Load factor <= 0.5; 0 marks an empty
+  * slot. */
+private[lid] final class LongSlots(keySet: Iterable[Long]) extends Serializable {
+  private val bits = {
+    var b = 4
+    while ((1L << b) < 2L * keySet.size) b += 1
+    b
+  }
+  val capacity: Int = 1 << bits
+  private val mask = capacity - 1
+  private val keys = new Array[Long](capacity)
+
+  private def home(key: Long): Int =
+    ((key * 0x9e3779b97f4a7c15L) >>> (64 - bits)).toInt
+
+  keySet.foreach { key =>
+    require(key != 0L, "0 marks an empty slot")
+    var s = home(key)
+    while (keys(s) != 0L && keys(s) != key) s = (s + 1) & mask
+    keys(s) = key
+  }
+
+  /** The key's slot, or -1 when absent. */
+  def slot(key: Long): Int = {
+    var s = home(key)
+    var k = keys(s)
+    while (k != 0L && k != key) { s = (s + 1) & mask; k = keys(s) }
+    if (k == 0L) -1 else s
+  }
+}
+
 /** fastText-style: hashed char n-grams (1..4) → averaged bag → linear
   * softmax, trained with plain deterministic SGD. `langs` restricts the
   * label space (the impresso-style model covers exactly fr/de/lb/en/it). */
@@ -64,47 +210,13 @@ final class HashedLinearLid(
   private val k = langs.length
   private val w = Array.ofDim[Float](k, dim)
   private val bias = new Array[Float](k)
+  require(Integer.bitCount(dim) == 1, s"dim $dim is not a power of two")
+  // a raw 31-bit hash's bucket: h & mask, the same value as h % dim
+  private val mask = dim - 1
 
-  private def features(text: String): Array[Int] = {
-    // digit-strip + lowercase pre-norm, word boundary markers like fastText
-    val t = "" + TextStats.stripDigits(text).toLowerCase + ""
-    val L = t.length
-    // exact count for n = 1..4: sum of max(L-n+1, 0) — preallocated
-    // primitive array, no boxing in the hot loop
-    var total = 0
-    var n = 1
-    while (n <= 4) { if (L >= n) total += L - n + 1; n += 1 }
-    val out = new Array[Int](total)
-    // FNV-1a extends one char at a time, so the order-(n+1) hash at
-    // position i is one step past the order-n hash at i: roll the hash
-    // per start position instead of rehashing each window from scratch
-    // (4L char steps vs ~10L). Output layout/content is BIT-IDENTICAL
-    // to the per-window `ngramHash` loop (n=1 block, then n=2, ...),
-    // so trained weights and predictions are unchanged.
-    val off2 = L            // block offsets: the n-gram block starts
-    val off3 = off2 + math.max(L - 1, 0) // after all shorter blocks
-    val off4 = off3 + math.max(L - 2, 0)
-    var i = 0
-    while (i < L) {
-      var h = 0x811c9dc5
-      h ^= t.charAt(i); h *= 0x01000193
-      out(i) = (h & 0x7fffffff) % dim
-      if (i + 2 <= L) {
-        h ^= t.charAt(i + 1); h *= 0x01000193
-        out(off2 + i) = (h & 0x7fffffff) % dim
-        if (i + 3 <= L) {
-          h ^= t.charAt(i + 2); h *= 0x01000193
-          out(off3 + i) = (h & 0x7fffffff) % dim
-          if (i + 4 <= L) {
-            h ^= t.charAt(i + 3); h *= 0x01000193
-            out(off4 + i) = (h & 0x7fffffff) % dim
-          }
-        }
-      }
-      i += 1
-    }
-    out
-  }
+  // digit-strip + lowercase pre-norm, word boundary markers like fastText
+  private def features(text: String): Array[Int] =
+    new LidText(text).ftHashes.map(_ & mask)
 
   def train(corpus: Seq[(String, String)]): this.type = {
     val idx = langs.zipWithIndex.toMap
@@ -145,24 +257,21 @@ final class HashedLinearLid(
     this
   }
 
-  override def predict(text: String): Array[(String, Double)] = {
-    if (text == null || text.isEmpty) return Array.empty
-    val fs = features(text)
-    if (fs.isEmpty) return Array.empty
+  override def score(in: LidText): Array[(String, Double)] = {
+    if (in.text == null || in.text.isEmpty) return Array.empty
+    val hs = in.ftHashes
     val scores = new Array[Double](k)
     var c = 0
     while (c < k) {
       var s = bias(c).toDouble
       val row = w(c)
       var j = 0
-      while (j < fs.length) { s += row(fs(j)); j += 1 }
+      while (j < hs.length) { s += row(hs(j) & mask); j += 1 }
       scores(c) = s; c += 1
     }
-    val p = Detectors.softmax(scores)
-    // k=5 / threshold 0.05 / clamp min(1, round(p,3)) — LI:186-190
-    Detectors.sortPreds(langs.zip(p))
-      .filter(_._2 > 0.05).take(5)
-      .map { case (l, pr) => (l, math.min(1.0, TextStats.roundTo(pr, 3))) }
+    // k=5 / threshold 0.05 / min(1, round(p,3)) — LI:186-190; softmax
+    // probs never exceed 1, so the clamp holds without code
+    Detectors.preds(langs, Detectors.softmax(scores), 0.05, 5, 3)
   }
 }
 
@@ -170,13 +279,10 @@ final class HashedLinearLid(
   * normalized posterior probabilities (norm_probs=True analog). */
 final class NaiveBayesLid(val langs: Vector[String]) extends LangDetector {
   private val k = langs.length
-  // per-gram log-likelihood VECTOR (one entry per class): a single map
-  // lookup per gram instead of k tuple-allocating lookups — the NB
-  // predict loop is a per-row hot path
-  // gram → per-class log-likelihood vector, keyed by the chars packed
-  // into a length-tagged Long (no substring allocation, no String hash
-  // on the per-row hot path)
-  private val logLik = new scala.collection.mutable.LongMap[Array[Double]]
+  // gram (chars packed into a length-tagged Long) → slot; the slot's
+  // per-class log-likelihoods sit at logLik(slot * k + c)
+  private var slots: LongSlots = _
+  private var logLik: Array[Double] = _
   private val defaults = new Array[Double](k)
 
   private def packGram(t: String, i: Int, n: Int): Long =
@@ -212,33 +318,26 @@ final class NaiveBayesLid(val langs: Vector[String]) extends LangDetector {
       defaults(c) = math.log(1.0 / (totals(c) + vocabSize))
       c += 1
     }
-    vocab.foreach { g =>
-      val v = new Array[Double](k)
-      var c2 = 0
-      while (c2 < k) {
-        v(c2) = math.log(
-          (counts(c2).getOrElse(g, 0) + 1.0) / (totals(c2) + vocabSize))
-        c2 += 1
-      }
-      logLik(g) = v
-    }
+    slots = new LongSlots(vocab)
+    logLik = NbTables.flat(slots, vocab, counts, totals, vocabSize)
     this
   }
 
-  override def predict(text: String): Array[(String, Double)] = {
-    if (text == null || text.isEmpty) return Array.empty
+  override def score(in: LidText): Array[(String, Double)] = {
+    if (in.text == null || in.text.isEmpty) return Array.empty
     val scores = new Array[Double](k)
     var any = false
-    val t = text.toLowerCase
+    val t = in.lower
     var n = 1
     while (n <= 2) {
       var i = 0
       while (i + n <= t.length) {
         any = true
-        val v = logLik.getOrNull(packGram(t, i, n))
+        val s = slots.slot(packGram(t, i, n))
         var c = 0
-        if (v != null) {
-          while (c < k) { scores(c) += v(c); c += 1 }
+        if (s >= 0) {
+          val base = s * k
+          while (c < k) { scores(c) += logLik(base + c); c += 1 }
         } else {
           while (c < k) { scores(c) += defaults(c); c += 1 }
         }
@@ -248,10 +347,9 @@ final class NaiveBayesLid(val langs: Vector[String]) extends LangDetector {
     }
     if (!any) return Array.empty
     // temper by length so probs aren't saturated 0/1 on long text
-    val len = math.max(1, text.length)
+    val len = math.max(1, in.text.length)
     val p = Detectors.softmax(scores.map(_ / math.sqrt(len.toDouble)))
-    Detectors.sortPreds(langs.zip(p)).take(3)
-      .map { case (l, pr) => (l, TextStats.roundTo(pr, 3)) }
+    Detectors.preds(langs, p, Double.NegativeInfinity, 3, 3)
   }
 }
 
@@ -277,7 +375,9 @@ final class SampledNbLid(
 
   require(trials <= 8, "trial coins are carved from one 64-bit mix")
   private val k = langs.length
-  private val logLik = new scala.collection.mutable.LongMap[Array[Double]]
+  // same flat gram table as NaiveBayesLid: logLik(slot * k + c)
+  private var slots: LongSlots = _
+  private var logLik: Array[Double] = _
   private val defaults = new Array[Double](k)
   private val keepByte = (keepRate * 256).toInt // per-trial coin: byte < this
   private val earlyIdx = langs.zipWithIndex
@@ -322,16 +422,8 @@ final class SampledNbLid(
       defaults(c) = math.log(1.0 / (totals(c) + vocabSize))
       c += 1
     }
-    vocab.foreach { g =>
-      val v = new Array[Double](k)
-      var c2 = 0
-      while (c2 < k) {
-        v(c2) = math.log(
-          (counts(c2).getOrElse(g, 0) + 1.0) / (totals(c2) + vocabSize))
-        c2 += 1
-      }
-      logLik(g) = v
-    }
+    slots = new LongSlots(vocab)
+    logLik = NbTables.flat(slots, vocab, counts, totals, vocabSize)
     this
   }
 
@@ -342,9 +434,9 @@ final class SampledNbLid(
   private def coinWord(g: Long): Long =
     graft.util.Mix.fin(g ^ (42L * graft.util.Mix.Golden))
 
-  override def predict(text: String): Array[(String, Double)] = {
-    if (text == null || text.isEmpty) return Array.empty
-    val t = text.toLowerCase // LI:158 lowercase pre-norm
+  override def score(in: LidText): Array[(String, Double)] = {
+    if (in.text == null || in.text.isEmpty) return Array.empty
+    val t = in.lower // LI:158 lowercase pre-norm
     val scores = Array.ofDim[Double](trials, k)
     var any = false
     var n = 1
@@ -352,7 +444,9 @@ final class SampledNbLid(
       var i = 0
       while (i + n <= t.length) {
         val g = packGram(t, i, n)
-        val v = logLik.getOrNull(g)
+        val slot = slots.slot(g)
+        val v = if (slot >= 0) logLik else defaults
+        val base = if (slot >= 0) slot * k else 0
         val coins = coinWord(g)
         var tr = 0
         while (tr < trials) {
@@ -360,8 +454,7 @@ final class SampledNbLid(
             any = true
             val s = scores(tr)
             var c = 0
-            if (v != null) { while (c < k) { s(c) += v(c); c += 1 } }
-            else { while (c < k) { s(c) += defaults(c); c += 1 } }
+            while (c < k) { s(c) += v(base + c); c += 1 }
           }
           tr += 1
         }
@@ -398,9 +491,29 @@ final class SampledNbLid(
       c += 1
     }
     // averaged distribution, round 9 (LI:138, 166), tiny entries dropped
-    Detectors.sortPreds(langs.zip(avg))
-      .filter(_._2 > 0.01)
-      .map { case (l, p) => (l, TextStats.roundTo(p, 9)) }
+    Detectors.preds(langs, avg, 0.01, k, 9)
+  }
+}
+
+/** Flat per-class log-likelihood table shared by the two NB members:
+  * slot s of `slots` holds class c's add-one smoothed log-likelihood at
+  * s * k + c (the same expression the per-gram arrays held). */
+private[lid] object NbTables {
+  def flat(slots: LongSlots, vocab: Iterable[Long],
+      counts: Array[scala.collection.mutable.LongMap[Int]], totals: Array[Long],
+      vocabSize: Double): Array[Double] = {
+    val k = counts.length
+    val out = new Array[Double](slots.capacity * k)
+    vocab.foreach { g =>
+      val base = slots.slot(g) * k
+      var c = 0
+      while (c < k) {
+        out(base + c) = math.log(
+          (counts(c).getOrElse(g, 0) + 1.0) / (totals(c) + vocabSize))
+        c += 1
+      }
+    }
+    out
   }
 }
 
@@ -409,26 +522,24 @@ final class SampledNbLid(
   * entries with confidence > 0.05 (LI:434). */
 final class RankLid(val langs: Vector[String], topM: Int = 300) extends LangDetector {
   private val k = langs.length
-  // trigram (3 chars packed 16 bits each) → per-language rank vector;
-  // a gram outside a language's top-M profile implicitly ranks topM.
-  // One lookup per gram instead of one String-keyed lookup per gram PER
-  // LANGUAGE, and zero substring allocation — prediction-identical: for
-  // equal-length trigrams the packed-long order equals the string
-  // lexicographic order, so the training tie-break (-count, gram) is
-  // unchanged.
-  private val gramRanks = new java.util.HashMap[Long, Array[Int]]
+  // trigram (3 chars packed 16 bits each) → slot; the slot's
+  // per-language ranks sit at ranks(slot * k + j). A gram outside a
+  // language's top-M profile ranks topM. For equal-length trigrams the
+  // packed-long order equals the string lexicographic order, so the
+  // training tie-break (-count, gram) is the string one.
+  private var slots: LongSlots = _
+  private var ranks: Array[Int] = _
 
   private def pack3(t: String, i: Int): Long =
     (t.charAt(i).toLong << 32) | (t.charAt(i + 1).toLong << 16) |
       t.charAt(i + 2).toLong
 
-  private def norm(text: String): String = "" + text.toLowerCase + ""
-
   def train(corpus: Seq[(String, String)]): this.type = {
+    val gramRanks = new scala.collection.mutable.LongMap[Array[Int]]
     langs.zipWithIndex.foreach { case (lang, li) =>
       val counts = new scala.collection.mutable.HashMap[Long, Int]
       corpus.iterator.filter(_._1 == lang).foreach { case (_, s) =>
-        val t = norm(s)
+        val t = new LidText(s).padded
         var i = 0
         while (i <= t.length - 3) {
           val g = pack3(t, i)
@@ -438,42 +549,42 @@ final class RankLid(val langs: Vector[String], topM: Int = 300) extends LangDete
       }
       val ranked = counts.toSeq.sortBy { case (g, n) => (-n, g) }.take(topM)
       ranked.zipWithIndex.foreach { case ((g, _), r) =>
-        var v = gramRanks.get(g)
-        if (v == null) { v = Array.fill(k)(topM); gramRanks.put(g, v) }
-        v(li) = r
+        gramRanks.getOrElseUpdate(g, Array.fill(k)(topM))(li) = r
       }
+    }
+    slots = new LongSlots(gramRanks.keys)
+    ranks = new Array[Int](slots.capacity * k)
+    gramRanks.foreach { case (g, v) =>
+      System.arraycopy(v, 0, ranks, slots.slot(g) * k, k)
     }
     this
   }
 
-  override def predict(text: String): Array[(String, Double)] = {
-    if (text == null || text.length < 3) return Array.empty
-    val t = norm(text)
+  override def score(in: LidText): Array[(String, Double)] = {
+    if (in.text == null || in.text.length < 3) return Array.empty
+    val t = in.padded
     val nGrams = t.length - 2
     val dist = new Array[Long](k)
     var i = 0
     while (i <= t.length - 3) {
-      val v = gramRanks.get(pack3(t, i))
-      if (v == null) {
-        var j = 0
+      val s = slots.slot(pack3(t, i))
+      var j = 0
+      if (s < 0) {
         while (j < k) { dist(j) += topM; j += 1 }
       } else {
-        var j = 0
-        while (j < k) { dist(j) += v(j); j += 1 }
+        val base = s * k
+        while (j < k) { dist(j) += ranks(base + j); j += 1 }
       }
       i += 1
     }
     val maxDist = topM.toDouble * nGrams
-    val raw = langs.zipWithIndex.map { case (lang, li) =>
-      // sharpen (^4) so the winner's normalized confidence is decisive —
-      // flat scores would never clear the stage-2 prob gate (0.5)
-      lang -> math.pow(math.max(0.0, 1.0 - dist(li) / maxDist), 4)
-    }
-    val z = raw.map(_._2).sum
+    // sharpen (^4) so the winner's normalized confidence is decisive —
+    // flat scores would never clear the stage-2 prob gate (0.5)
+    val raw = Array.tabulate(k)(li =>
+      math.pow(math.max(0.0, 1.0 - dist(li) / maxDist), 4))
+    val z = raw.sum
     if (z <= 0) return Array.empty
-    Detectors.sortPreds(raw.map { case (l, s) => (l, s / z) })
-      .filter(_._2 > 0.05)
-      .map { case (l, p) => (l, TextStats.roundTo(p, 3)) }
+    Detectors.preds(langs, raw.map(_ / z), 0.05, k, 3)
   }
 }
 
@@ -537,9 +648,9 @@ final class ProtoLid(val langs: Vector[String], dim: Int = 1 << 13,
     this
   }
 
-  override def predict(text: String): Array[(String, Double)] = {
-    if (text == null || text.length < 2) return Array.empty
-    val t = text.toLowerCase
+  override def score(in: LidText): Array[(String, Double)] = {
+    if (in.text == null || in.text.length < 2) return Array.empty
+    val t = in.lower
     val scores = new Array[Double](k)
     var grams = 0
     var n = 2
@@ -558,11 +669,8 @@ final class ProtoLid(val langs: Vector[String], dim: Int = 1 << 13,
     val norm = math.sqrt(grams.toDouble)
     var c = 0
     while (c < k) { scores(c) = temp * scores(c) / norm; c += 1 }
-    val probs = Detectors.softmax(scores)
     // keep score > 0.05, probs rounded (LI:407-414)
-    Detectors.sortPreds(langs.zip(probs))
-      .filter(_._2 > 0.05)
-      .map { case (l, p) => (l, math.min(1.0, TextStats.roundTo(p, 3))) }
+    Detectors.preds(langs, Detectors.softmax(scores), 0.05, k, 3)
   }
 }
 
@@ -581,13 +689,15 @@ final class CharLm(orderWeights: Array[Double] = Array(0.1, 0.3, 0.6))
   private val contexts = new scala.collection.mutable.LongMap[Int]
   private var charVocab = 64.0
   // the full interpolated char probability at position i >= 2 depends
-  // only on the 3-char window s[i-2..i], so it is precomputed per
-  // trained trigram (w1*p1 + w2*p2 + w3*p3 in the same order => the
-  // cached double is BIT-IDENTICAL to the slow path). One lookup per
-  // scored char instead of six; unseen trigrams (whose lower-order
-  // parts may still be trained) fall back to the slow path. Built once
-  // in train, read-only afterwards — safe under concurrent predict.
-  private val triProb = new scala.collection.mutable.LongMap[Double]
+  // only on the 3-char window s[i-2..i], so its log is precomputed per
+  // trained trigram (w1*p1 + w2*p2 + w3*p3 in the same order, then the
+  // same math.log => the cached double is BIT-IDENTICAL to the slow
+  // path). One flat-table lookup per scored char instead of six lookups
+  // and a log; unseen trigrams (whose lower-order parts may still be
+  // trained) fall back to the slow path. Built once in train, read-only
+  // afterwards — safe under concurrent predict.
+  private var triSlots = new LongSlots(Nil)
+  private var triLogP: Array[Double] = new Array[Double](triSlots.capacity)
 
   /** Pack s[from..until) (until-from <= 3) into a tagged Long key.
     * The length tag (empty ctx = 1) is OR'd after the char loop — chars
@@ -624,15 +734,20 @@ final class CharLm(orderWeights: Array[Double] = Array(0.1, 0.3, 0.6))
     // precompute the interpolated probability for every trained trigram
     // (tag 4 = 3-char keys; see pack): reconstruct the window and run
     // the exact slow-path arithmetic once per distinct trigram
-    if (maxOrder == 3) counts.keysIterator.filter(k2 => (k2 >>> 48) == 4).foreach { key =>
-      val w = new String(Array(
-        ((key >>> 32) & 0xffff).toChar,
-        ((key >>> 16) & 0xffff).toChar,
-        (key & 0xffff).toChar))
-      var p = 0.0
-      var o = 1
-      while (o <= maxOrder) { p += orderWeights(o - 1) * condProb(w, 2, o); o += 1 }
-      triProb(key) = p
+    if (maxOrder == 3) {
+      val tri = counts.keys.filter(k2 => (k2 >>> 48) == 4)
+      triSlots = new LongSlots(tri)
+      triLogP = new Array[Double](triSlots.capacity)
+      tri.foreach { key =>
+        val w = new String(Array(
+          ((key >>> 32) & 0xffff).toChar,
+          ((key >>> 16) & 0xffff).toChar,
+          (key & 0xffff).toChar))
+        var p = 0.0
+        var o = 1
+        while (o <= maxOrder) { p += orderWeights(o - 1) * condProb(w, 2, o); o += 1 }
+        triLogP(triSlots.slot(key)) = math.log(p)
+      }
     }
     this
   }
@@ -646,34 +761,35 @@ final class CharLm(orderWeights: Array[Double] = Array(0.1, 0.3, 0.6))
   }
 
   /** Per-character perplexity; +Infinity-free (capped by smoothing). */
-  def perplexity(text: String): Double = perplexityImpl(text, maxOrder == 3)
+  def perplexity(text: String): Double = perplexity(new LidText(text))
+
+  /** `perplexity` over a row normalized once for the whole ensemble. */
+  def perplexity(in: LidText): Double = perplexityImpl(in, maxOrder == 3)
 
   /** Cache-bypassed twin (test hook): the spec asserts bit-equality of
     * the cached and uncached paths over arbitrary input. */
   private[graft] def perplexityUncached(text: String): Double =
-    perplexityImpl(text, cached = false)
+    perplexityImpl(new LidText(text), cached = false)
 
-  private def perplexityImpl(text: String, cached: Boolean): Double = {
-    if (text == null || text.isEmpty) return 1e6
-    val s = "" + text.toLowerCase + ""
+  private def perplexityImpl(in: LidText, cached: Boolean): Double = {
+    if (in.text == null || in.text.isEmpty) return 1e6
+    val s = "" + in.lower + ""
     var logSum = 0.0
     var i = 1
     while (i < s.length) {
       // hot path: one packed-window key + one lookup per char (i >= 2);
       // positions with truncated context and cache misses (untrained
-      // trigrams) take the exact slow path. Probs are strictly positive,
-      // so -1.0 is a safe miss sentinel (no boxing, single probe).
-      var p = if (cached && i >= 2) {
-        val key = (4L << 48) | (s.charAt(i - 2).toLong << 32) |
-          (s.charAt(i - 1).toLong << 16) | s.charAt(i)
-        triProb.getOrElse(key, -1.0)
-      } else -1.0
-      if (p < 0.0) {
-        p = 0.0
+      // trigrams) take the exact slow path
+      val slot = if (cached && i >= 2) triSlots.slot((4L << 48) |
+        (s.charAt(i - 2).toLong << 32) | (s.charAt(i - 1).toLong << 16) | s.charAt(i))
+      else -1
+      if (slot >= 0) logSum += triLogP(slot)
+      else {
+        var p = 0.0
         var o = 1
         while (o <= maxOrder) { p += orderWeights(o - 1) * condProb(s, i, o); o += 1 }
+        logSum += math.log(p)
       }
-      logSum += math.log(p)
       i += 1
     }
     math.exp(-logSum / (s.length - 1))

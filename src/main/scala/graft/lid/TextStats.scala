@@ -15,7 +15,6 @@ object TextStats {
   // Unicode-aware, so we enable UNICODE_CHARACTER_CLASS for parity.
   private val NonAlpha: Pattern =
     Pattern.compile("[\\W_\\d]+", Pattern.UNICODE_CHARACTER_CLASS)
-  private val Digits: Pattern = Pattern.compile("\\d+")
   private val WsRun: Pattern = Pattern.compile("\\s+")
   // BPE-ish token regex: word runs or single non-space symbols.
   private val TokenRe: Pattern =
@@ -23,22 +22,71 @@ object TextStats {
       Pattern.UNICODE_CHARACTER_CLASS)
 
   /** `len(re.sub(r"[\W_\d]+","",text)) / len(text)`; 0.0 for null/empty.
-    * Reference: lib/language_identification.py:89-94. */
+    * Reference: lib/language_identification.py:89-94. All-ASCII text
+    * (the common case) is counted without the regex: there the Unicode
+    * classes leave exactly the letters a-z and A-Z. */
   def alphabeticalRatio(text: String): Double = {
     if (text == null || text.isEmpty) return 0.0
-    NonAlpha.matcher(text).replaceAll("").length.toDouble / text.length
+    var letters = 0
+    var i = 0
+    while (i < text.length) {
+      val c = text.charAt(i)
+      if (c >= 0x80)
+        return NonAlpha.matcher(text).replaceAll("").length.toDouble / text.length
+      val lc = c | 0x20
+      if (lc >= 'a' && lc <= 'z') letters += 1
+      i += 1
+    }
+    letters.toDouble / text.length
   }
 
+  // 10^0 .. 10^22, every one exact in a double
+  private val Pow10: Array[Double] = Array.iterate(1.0, 23)(_ * 10)
+
   /** Round half-up to n digits (matches Python round-for-positive +
-    * Spark/DuckDB round on the value ranges we use). */
+    * Spark/DuckDB round on the value ranges we use). The semantics are
+    * `BigDecimal(x).setScale(n, HALF_UP).toDouble`, and `BigDecimal(x)`
+    * is the shortest decimal that reads back as x. That decimal times
+    * 10^n lies within two ulps of the double `|x| * 10^n`, so unless
+    * the double's fraction is within 1e-6 of one half (and below 1e8,
+    * where two ulps are under 3e-8) both round to the same integer q.
+    * The result is then `q / 10^n`, which is how `BigDecimal` converts a
+    * small scaled integer to a double; ties and large values take the
+    * `BigDecimal` form itself. */
   def roundTo(x: Double, n: Int): Double = {
     if (x.isNaN || x.isInfinite) return x
+    if (n >= 0 && n < Pow10.length) {
+      val y = math.abs(x) * Pow10(n)
+      if (y < 1e8) {
+        val fl = math.floor(y)
+        val f = y - fl
+        if (math.abs(f - 0.5) > 1e-6) {
+          val r = (if (f > 0.5) fl + 1 else fl) / Pow10(n)
+          return if (x < 0 && r != 0.0) -r else r
+        }
+      }
+    }
     BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
-  /** fastText pre-normalization: strip digit runs (LI:183-184). */
-  def stripDigits(text: String): String =
-    if (text == null) "" else Digits.matcher(text).replaceAll("")
+  /** fastText pre-normalization: strip ASCII digit runs (LI:183-184).
+    * Returns `text` itself when it has no digit. */
+  def stripDigits(text: String): String = {
+    if (text == null) return ""
+    var i = 0
+    while (i < text.length && !isAsciiDigit(text.charAt(i))) i += 1
+    if (i == text.length) return text
+    val sb = new java.lang.StringBuilder(text.length)
+    sb.append(text, 0, i)
+    while (i < text.length) {
+      val c = text.charAt(i)
+      if (!isAsciiDigit(c)) sb.append(c)
+      i += 1
+    }
+    sb.toString
+  }
+
+  private def isAsciiDigit(c: Char): Boolean = c >= '0' && c <= '9'
 
   def whitespaceTokens(text: String): Array[String] = {
     if (text == null) return Array.empty
@@ -296,17 +344,32 @@ object TextStats {
     * exact, not probabilistic), and the Jaccard inverted index joins on
     * the hash anyway at scale. Output order is insertion order; all
     * consumers are order-independent (set semantics). */
+  /** Slots of `shingleHashes`' open-addressed set for m windows: the
+    * next power of two >= 2m, at least 16. Sized in Long, so it throws
+    * instead of overflowing Int (a 16-slot table that never finds an
+    * empty slot, and so an endless probe loop) when 2m passes the
+    * largest array. */
+  private[graft] def hashSetCapacity(m: Int): Int = {
+    var cap = 16L
+    while (cap < 2L * m) cap <<= 1
+    if (cap > MaxArrayPow2)
+      throw new IllegalArgumentException(s"$m shingles exceed the largest hash set")
+    cap.toInt
+  }
+
+  // largest power of two a JVM array can hold
+  private val MaxArrayPow2 = 1L << 30
+
   def shingleHashes(text: String, n: Int): Array[Long] = {
     if (text == null) return Array.emptyLongArray
     val norm = WsRun.matcher(text.trim.toLowerCase).replaceAll(" ")
     if (norm.isEmpty) return Array.emptyLongArray
     if (norm.length < n) return Array(fnv64(norm))
     val m = norm.length - n + 1
-    // open-addressed set, capacity = next pow2 >= 2m (load <= 0.5);
-    // 0L is the empty sentinel — a real zero hash (vanishingly rare but
-    // legal) is tracked by the flag instead of a slot
-    var cap = 16
-    while (cap < m * 2) cap <<= 1
+    // open-addressed set, load <= 0.5; 0L is the empty sentinel — a real
+    // zero hash (vanishingly rare but legal) is tracked by the flag
+    // instead of a slot
+    val cap = hashSetCapacity(m)
     val mask = cap - 1
     val table = new Array[Long](cap)
     val out = new Array[Long](m)

@@ -1,9 +1,10 @@
 package graft.operators
 
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.codec.Audio
-import graft.lid.{LidModels, TextStats}
+import graft.lid.{LidModels, LidText, TextStats}
 import graft.model._
 
 /** Stage 1 — per-clip inference (= `lib/language_identification.py`,
@@ -14,7 +15,10 @@ import graft.model._
   *  - models arrive via a `Broadcast` handle and are resolved once per
   *    partition (mirrors the reference's per-process model load,
   *    LI:285-351) — on a 1000-executor cluster each executor deserializes
-  *    the bundle once, not once per task;
+  *    the bundle once, not once per task. One broadcast serves every call
+  *    on a SparkContext;
+  *  - each gated row is normalized once ([[LidText]]) and every detector
+  *    and the char LM score that one normalization;
   *  - the validity gate is a conditional projection, NOT a filter:
   *    invalid rows pass through with base fields only (LI:630-662);
   *  - cheap text gates run BEFORE the expensive detectors so short/no-text
@@ -74,32 +78,49 @@ object Stage1 {
         skip_reason = skipReason)
     } else {
       // per-system inference with per-system error isolation (LI:353-439)
-      def safe(f: String => Array[(String, Double)]): Array[LangProb] =
+      val in = new LidText(text)
+      def safe(f: LidText => Array[(String, Double)]): Array[LangProb] =
         try {
-          val r = f(text)
+          val r = f(in)
           if (r == null || r.isEmpty) null else r.map(t => LangProb(t._1, t._2))
         } catch { case _: Exception => null }
 
       Stage1Row(
         clip.clip_id, parseSource(clip.clip_id), parseYear(clip.clip_id),
         len, clip.orig_lg, Some(ratioRounded),
-        safe(models.impressoFt.predict),
-        safe(models.wpFt.predict),
-        safe(models.langidNb.predict),
-        safe(models.langdetectNb.predict),
-        safe(models.linguaRank.predict),
-        safe(models.impressoLp.predict),
-        Some(TextStats.roundTo(models.charLm.perplexity(text), p.roundNDigits)),
+        safe(models.impressoFt.score),
+        safe(models.wpFt.score),
+        safe(models.langidNb.score),
+        safe(models.langdetectNb.score),
+        safe(models.linguaRank.score),
+        safe(models.impressoLp.score),
+        Some(TextStats.roundTo(models.charLm.perplexity(in), p.roundNDigits)),
         audioOk, rms, if (pcm == null) 0 else pcm.length,
         clip.transcript, Thresholds.FixedTs, Thresholds.Stage1Version)
     }
   }
 
+  // one model broadcast per SparkContext; weak keys plus the isStopped
+  // sweep drop the entries of stopped contexts
+  private val modelsBcs =
+    new java.util.WeakHashMap[SparkContext, Broadcast[LidModels]]()
+
+  /** The `LidModels.default` broadcast of `sc`, created on first use. */
+  private[graft] def modelsBc(sc: SparkContext): Broadcast[LidModels] =
+    modelsBcs.synchronized {
+      modelsBcs.keySet.removeIf(c => c == null || c.isStopped)
+      var bc = modelsBcs.get(sc)
+      if (bc == null) {
+        bc = sc.broadcast(LidModels.default)
+        modelsBcs.put(sc, bc)
+      }
+      bc
+    }
+
   def apply(spark: SparkSession, clips: Dataset[ClipRow],
       params: Params = Params()): Dataset[Stage1Row] = {
     import spark.implicits._
-    val bc: Broadcast[LidModels] =
-      spark.sparkContext.broadcast(LidModels.default)
+    val bc = modelsBc(spark.sparkContext)
     clips.mapPartitions { it =>
       val models = bc.value // resolved once per partition
       it.map(processClip(_, models, params))

@@ -1,19 +1,21 @@
 package graft.operators
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.lid.TextStats
 import graft.model._
 
 /** Stage 1b — per-source statistics (= `lib/newspaper_statistics.py`,
   * SURVEY.md §2.5 A1-A12, §3.2).
   *
-  * Plan shape (scale notes): ONE narrow pass + one tiny exchange.
-  * Each input partition folds its rows into per-source counter bundles
-  * (hand-written map-side combine — the A5/A6 ensemble vote and top-1
-  * extraction are row-local and happen inside the fold), so the shuffle
-  * carries at most (#partitions × #sources) counter rows, never data
-  * rows. A DataFrame explode/groupBy/join bundle computes the same thing
-  * but costs several exchanges + plans; at 10^12 rows both move only
-  * counters, but this shape also keeps the job count constant.
+  * Plan shape (scale notes): ONE job. Each input partition folds its
+  * rows into per-source counter bundles (the A5/A6 ensemble vote and
+  * top-1 extraction are row-local and happen inside the fold), and
+  * `treeAggregate` merges the partials. Up to 5 input partitions they
+  * go straight to the driver, with no exchange; beyond that it adds a
+  * foldByKey level (fan-in ~√#partitions) inside the same job, which
+  * shuffles at most (#partitions × #sources) counter bundles, never
+  * data rows. The merged stats are tiny (one row per source), so
+  * `apply` is eager and returns them as a local Dataset.
   *
   * The A4 relfreq denominator is `n` (valid-row count) for ALL systems,
   * not the per-LID total (NS:583-585) — honored in `finish` below.
@@ -40,58 +42,51 @@ object Stage1b {
     "langid_nb" -> r.langid_nb, "langdetect_nb" -> r.langdetect_nb,
     "lingua_rank" -> r.lingua_rank, "impresso_lp" -> r.impresso_lp)
 
-  // compound-key separator: U+0001 (written as an escape so it stays
-  // visible in the source; a raw control-char literal renders as an
-  // empty string and invites an accidental "fix"). Lang codes and lid
-  // names never contain it.
-  private val Sep = "\u0001"
+  // A4/A8 counter rows: the six systems, then the orig_lg and ensemble
+  // pseudo-systems
+  private val CountedLids: IndexedSeq[String] =
+    (LidNames :+ "orig_lg" :+ "ensemble").toVector
+  private val OrigIdx = LidNames.size
+  private val EnsIdx = OrigIdx + 1
 
-  /** Mergeable per-source counter bundle (compound `lidlang` keys
-    * keep the encoder to flat string-keyed maps). */
-  final case class SrcAgg(
-      source: String,
-      n: Long, // valid rows (A3)
-      typeDist: Map[String, Long], // over ALL rows (A1)
-      lidCnt: Map[String, Long], // (lid,lang) absolute counts (A4)
-      lidSupp: Map[String, Long], // top1==ensemble counts (A8)
-      origTotal: Long, // A9/A10
-      origSupp: Long,
-      disagree: Map[String, Long]) { // "orig->ens" (A9)
+  private type Counts = scala.collection.mutable.HashMap[String, Long]
 
-    def merge(o: SrcAgg): SrcAgg = {
-      def m(a: Map[String, Long], b: Map[String, Long]) =
-        b.foldLeft(a) { case (acc, (k, v)) =>
-          acc.updated(k, acc.getOrElse(k, 0L) + v)
-        }
-      SrcAgg(source, n + o.n, m(typeDist, o.typeDist), m(lidCnt, o.lidCnt),
-        m(lidSupp, o.lidSupp), origTotal + o.origTotal,
-        origSupp + o.origSupp, m(disagree, o.disagree))
+  private def bump(m: Counts, k: String, by: Long = 1L): Unit =
+    m.update(k, m.getOrElse(k, 0L) + by)
+
+  /** Mergeable per-source counter bundle; the per-system counts are kept
+    * per `CountedLids` index, lang → count. */
+  final class SrcAgg extends Serializable {
+    var n = 0L // valid rows (A3)
+    val typeDist = new Counts // over ALL rows (A1)
+    val lidCnt = Array.fill(CountedLids.size)(new Counts) // absolute counts (A4)
+    val lidSupp = Array.fill(CountedLids.size)(new Counts) // top1==ensemble counts (A8)
+    var origTotal = 0L // A9/A10
+    var origSupp = 0L
+    val disagree = new Counts // "orig->ens" (A9)
+
+    def merge(o: SrcAgg): this.type = {
+      def m(a: Counts, b: Counts): Unit = b.foreach { case (k, v) => bump(a, k, v) }
+      n += o.n
+      m(typeDist, o.typeDist)
+      CountedLids.indices.foreach { i =>
+        m(lidCnt(i), o.lidCnt(i)); m(lidSupp(i), o.lidSupp(i))
+      }
+      origTotal += o.origTotal
+      origSupp += o.origSupp
+      m(disagree, o.disagree)
+      this
     }
   }
 
-  private final class MutAgg {
-    var n = 0L
-    val typeDist = new scala.collection.mutable.HashMap[String, Long]
-    val lidCnt = new scala.collection.mutable.HashMap[String, Long]
-    val lidSupp = new scala.collection.mutable.HashMap[String, Long]
-    var origTotal = 0L
-    var origSupp = 0L
-    val disagree = new scala.collection.mutable.HashMap[String, Long]
-    def bump(m: scala.collection.mutable.HashMap[String, Long], k: String): Unit =
-      m.update(k, m.getOrElse(k, 0L) + 1L)
-    def freeze(source: String): SrcAgg =
-      SrcAgg(source, n, typeDist.toMap, lidCnt.toMap, lidSupp.toMap,
-        origTotal, origSupp, disagree.toMap)
-  }
-
   /** Fold one row into its source's accumulator. */
-  private def accumulate(acc: MutAgg, r: Stage1Row, p: Params): Unit = {
+  private def accumulate(acc: SrcAgg, r: Stage1Row, p: Params): Unit = {
     // A1 — type distribution over ALL rows (img analog incl., NS:479)
     val tp =
       if (!r.audio_ok) "undecodable"
       else if (r.audio_rms == 0.0) "silent"
       else "clip"
-    acc.bump(acc.typeDist, tp)
+    bump(acc.typeDist, tp)
 
     // F3 + F4 (NS:481-495)
     val valid = r.audio_ok && r.audio_rms > 0.0 &&
@@ -105,14 +100,13 @@ object Stage1b {
       p.boostedLids, p.boostFactor, p.minProb, p.minVoteScore).orNull
 
     // A4/A8 per system + orig_lg + ensemble pseudo-systems
-    val entries = tops.map(t => (t.lid, t.lang)) ++
-      (if (r.orig_lg != null) Seq(("orig_lg", r.orig_lg)) else Nil) ++
-      (if (ens != null) Seq(("ensemble", ens)) else Nil)
-    entries.foreach { case (lid, lang) =>
-      val k = lid + Sep + lang
-      acc.bump(acc.lidCnt, k)
-      if (ens != null && ens == lang) acc.bump(acc.lidSupp, k)
+    def count(li: Int, lang: String): Unit = {
+      bump(acc.lidCnt(li), lang)
+      if (ens != null && ens == lang) bump(acc.lidSupp(li), lang)
     }
+    tops.foreach(t => count(CountedLids.indexOf(t.lid), t.lang))
+    if (r.orig_lg != null) count(OrigIdx, r.orig_lg)
+    if (ens != null) count(EnsIdx, ens)
 
     // A9/A10 — orig_lg_total_decisions counts EVERY valid row carrying
     // orig_lg (NS:532-534), whether or not the ensemble decided; support
@@ -124,39 +118,28 @@ object Stage1b {
       acc.origTotal += 1
       if (ens != null) {
         if (r.orig_lg == ens) acc.origSupp += 1
-        else acc.bump(acc.disagree, r.orig_lg + "->" + ens)
+        else bump(acc.disagree, r.orig_lg + "->" + ens)
       }
     }
   }
 
   /** Assemble the public stats row from a merged counter bundle. */
-  def finish(a: SrcAgg, p: Params): SourceStats = {
-    val byLid = a.lidCnt.toSeq.map { case (k, v) =>
-      val Array(lid, lang) = k.split(Sep, 2); (lid, lang, v)
-    }
-    def nested(vals: Seq[(String, String, Double)]) =
-      vals.groupBy(_._1).map { case (lid, xs) =>
-        lid -> xs.map(x => x._2 -> x._3).toMap
-      }
-    val absolute = byLid.groupBy(_._1).map { case (lid, xs) =>
-      lid -> xs.map(x => x._2 -> x._3).toMap
-    }
-    val dist = nested(byLid.map { case (lid, lang, c) =>
-      (lid, lang, BigDecimal(c.toDouble / a.n)
-        .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    })
-    val support = nested(byLid.map { case (lid, lang, c) =>
-      val supp = a.lidSupp.getOrElse(lid + Sep + lang, 0L)
-      (lid, lang, BigDecimal(supp.toDouble / c)
-        .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    })
+  def finish(source: String, a: SrcAgg, p: Params): SourceStats = {
+    def perLid[V](f: (Int, String, Long) => V) =
+      CountedLids.indices.filter(a.lidCnt(_).nonEmpty).map { li =>
+        CountedLids(li) -> a.lidCnt(li).map { case (lang, c) => lang -> f(li, lang, c) }.toMap
+      }.toMap
+    val absolute = perLid((_, _, c) => c)
+    val dist = perLid((_, _, c) => TextStats.roundTo(c.toDouble / a.n, 9))
+    val support = perLid((li, lang, c) =>
+      TextStats.roundTo(a.lidSupp(li).getOrElse(lang, 0L).toDouble / c, 9))
     val ensDist = absolute.getOrElse("ensemble", Map.empty)
     // A12 — dominant, deterministic tie-break (cnt desc, lang asc)
     val dominant = ensDist.toSeq.sortBy { case (l, c) => (-c, l) }
       .headOption.map(_._1).orNull
     val domCnt = ensDist.values.maxOption.getOrElse(0L)
     SourceStats(
-      source = a.source,
+      source = source,
       lids = LidNames,
       boosted_lids = p.boostedLids.toSeq.sorted,
       boost_factor = p.boostFactor,
@@ -170,8 +153,8 @@ object Stage1b {
       lid_distributions = dist,
       lid_absolute_counts = absolute,
       lg_support = support,
-      clip_type_distribution = a.typeDist,
-      orig_lg_ensemble_disagreements = a.disagree,
+      clip_type_distribution = a.typeDist.toMap,
+      orig_lg_ensemble_disagreements = a.disagree.toMap,
       orig_lg_total_decisions = a.origTotal,
       ts = Thresholds.FixedTs)
   }
@@ -179,15 +162,21 @@ object Stage1b {
   def apply(spark: SparkSession, s1: Dataset[Stage1Row],
       p: Params = Params()): Dataset[SourceStats] = {
     import spark.implicits._
-    val partials: Dataset[SrcAgg] = s1.mapPartitions { it =>
-      val accs = new scala.collection.mutable.HashMap[String, MutAgg]
-      it.foreach { r =>
-        accumulate(accs.getOrElseUpdate(r.source, new MutAgg), r, p)
-      }
-      accs.iterator.map { case (src, acc) => acc.freeze(src) }
-    }
-    partials.groupByKey(_.source)
-      .reduceGroups((a, b) => a.merge(b))
-      .map { case (_, agg) => finish(agg, p) }
+    val merged = s1.rdd.treeAggregate(
+      new scala.collection.mutable.HashMap[String, SrcAgg])(
+      (accs, r) => {
+        accumulate(accs.getOrElseUpdate(r.source, new SrcAgg), r, p)
+        accs
+      },
+      (a, b) => {
+        b.foreach { case (src, agg) =>
+          a.get(src) match {
+            case Some(x) => x.merge(agg)
+            case None => a.update(src, agg)
+          }
+        }
+        a
+      })
+    spark.createDataset(merged.toSeq.map { case (src, agg) => finish(src, agg, p) })
   }
 }

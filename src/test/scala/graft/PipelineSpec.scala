@@ -51,6 +51,64 @@ class PipelineSpec extends AnyFunSuite {
     assert(!mPlan.contains("Exchange"), s"metrics shuffled:\n$mPlan")
   }
 
+  test("plan audit: the whole pipeline, stage1b included, runs without an exchange") {
+    // stage1b is an eager treeAggregate job, so its plan is audited at
+    // the job level: a job without a shuffle dependency has one stage,
+    // its result stage. At 4 partitions treeAggregate merges on the
+    // driver; beyond 5 it adds a foldByKey level of counter bundles.
+    val sc = spark.sparkContext
+    val group = "pipeline-exchange-audit"
+    val shuffleStages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val seenJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (e.stageInfos.size > 1)
+            shuffleStages.add(s"job ${e.jobId}: ${e.stageInfos.map(_.name)}")
+          seenJobs.add(e.jobId)
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "exchange audit")
+      val r = try {
+        val r = Pipeline.run(spark, Pipeline.clips(spark, 2000L, seed = 3L, partitions = 4))
+        r.scrubbed.collect()
+        Pipeline.metrics(spark, r.decisions).collect()
+        r
+      } finally sc.clearJobGroup()
+      val plans = Seq(r.stage1.toDF(), Stage1b(spark, r.stage1).toDF(), r.decisions.toDF(),
+        r.scrubbed.toDF(), Pipeline.metrics(spark, r.decisions).toDF())
+        .map(_.queryExecution.executedPlan.toString)
+      plans.foreach(pl => assert(!pl.contains("Exchange"), pl))
+      val jobs = sc.statusTracker.getJobIdsForGroup(group).toSet
+      assert(jobs.nonEmpty)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.forall(seenJobs.contains) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(jobs.forall(seenJobs.contains), s"listener missed jobs: $jobs vs $seenJobs")
+      assert(shuffleStages.isEmpty, shuffleStages.toString)
+      r.stage1.unpersist(true)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("stage1: one model broadcast per SparkContext, reused across calls") {
+    val sc = spark.sparkContext
+    // broadcast ids come from one per-context counter, so a probe
+    // broadcast on each side counts the broadcasts made in between
+    def probe(): Long = { val b = sc.broadcast(0); val id = b.id; b.destroy(); id }
+    val before = probe()
+    val a = Stage1(spark, clipsDs)
+    val b = Stage1(spark, clipsDs)
+    val after = probe()
+    assert(after - before <= 2, s"${after - before - 1} broadcasts for two Stage1 calls")
+    assert(Stage1.modelsBc(sc) eq Stage1.modelsBc(sc))
+    val again = probe()
+    Stage1(spark, clipsDs)
+    Stage1(spark, clipsDs)
+    assert(probe() == again + 1, "a warm Stage1 call created a broadcast")
+    assert(a.count() == N && b.count() == N)
+  }
+
   test("stage1b: stats per source with sane fields") {
     val stats = result.stats
     assert(stats.nonEmpty && stats.size <= ClipGen.sources.size)
@@ -79,6 +137,44 @@ class PipelineSpec extends AnyFunSuite {
             "not n (should be the 0.8 presence rate, not 1.0)")
       }
     }
+  }
+
+  /** Every field of a stats row in a fixed order, maps sorted by key;
+    * `Double.toString` round-trips, so equal strings mean equal bits. */
+  private def canon(s: SourceStats): String = {
+    def m[V](x: Map[String, V]) =
+      x.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("{", ",", "}")
+    def mm[V](x: Map[String, Map[String, V]]) =
+      x.toSeq.sortBy(_._1).map { case (k, v) => s"$k=${m(v)}" }.mkString("{", ",", "}")
+    Seq(s.source, s.lids.mkString(","), s.boosted_lids.mkString(","),
+      s.boost_factor, Option(s.admissible_languages).map(_.mkString(",")),
+      s.dominant_language, s.dominant_language_ratio,
+      s.overall_orig_lg_support, s.n, mm(s.lid_distributions),
+      mm(s.lid_absolute_counts), mm(s.lg_support),
+      m(s.clip_type_distribution), m(s.orig_lg_ensemble_disagreements),
+      s.orig_lg_total_decisions, s.ts, s.aggregator_lid).mkString("|")
+  }
+
+  private def statsDigest(stats: Seq[SourceStats]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    stats.map(canon).sorted.foreach(c => md.update((c + "\n").getBytes("UTF-8")))
+    md.digest().map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  test("stage1b: stats identical at 1, 4 and 37 input partitions and " +
+      "equal to pinned values (ClipGen seed 7)") {
+    val s1 = Stage1(spark, Pipeline.clips(spark, 3000L, seed = 7L, partitions = 4))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    try {
+      val digests = Seq(s1.coalesce(1), s1, s1.repartition(37)).map { ds =>
+        val stats = Stage1b(spark, ds).collect().toSeq
+        assert(stats.map(_.n).sum > 0)
+        statsDigest(stats)
+      }
+      assert(digests.distinct.size == 1, digests)
+      assert(digests.head ==
+        "b623d4c4564cc2197d63f39be28c83bd7ff2dd3a7f821c8cfe0923699885a0fc", digests.head)
+    } finally s1.unpersist(true)
   }
 
   test("A9/A10: orig_lg_total counts undecided-ensemble rows (NS:532-534)") {
