@@ -967,13 +967,7 @@ object SparkEntry {
     }),
     "text_tfidf_topk" -> ((s, d) => {
       // corpus-level TF-IDF, top-3 terms per doc (smooth sklearn-style
-      // idf = ln((N+1)/(df+1)) + 1). The TF frame is consumed ONCE —
-      // document frequency is a window count over the term partition of
-      // the SAME frame (tf rows are distinct (doc, term) pairs, so
-      // count(*) over term ≡ distinct-doc df). The r2 shape fed tf into
-      // both a groupBy(term) agg AND the join, unpersisted, so the
-      // explode executed twice; the window keeps one execution without
-      // any cache-lifetime question. Doc count is a broadcast 1-row
+      // idf = ln((N+1)/(df+1)) + 1). Doc count is a broadcast 1-row
       // frame off the doc_id column only. At 100 TB: one explode pass,
       // exchanges keyed by (doc,term) / term / doc — all bounded by
       // corpus tokens; nothing driver-side.
@@ -983,19 +977,21 @@ object SparkEntry {
         .agg(count(lit(1)).as("tf"))
       val nDocs = t(s, d, "documents")
         .agg(countDistinct(col("doc_id")).as("n"))
-      // df as a groupBy census + broadcast join, NOT a window over the
-      // term partition (guide §2.5): tf rows are distinct (doc, term)
-      // pairs, so count per term group ≡ the window count — but the
-      // window shuffled and sorted EVERY tf row by term (natural-
-      // language vocab is Zipfian: the hot terms serialize on a few
-      // tasks), while the census partial-aggregates map-side down to
-      // one row per distinct term (vocabulary-bounded, broadcastable at
-      // any corpus size) and the tf frame's exchange is REUSED by both
-      // consumers (same canonical subtree), so tf computes once.
+      // df as a groupBy census + join, NOT a window over the term
+      // partition (guide §2.5): tf rows are distinct (doc, term) pairs,
+      // so count per term group ≡ the window count — but the window
+      // shuffled and sorted EVERY tf row by term (natural-language vocab
+      // is Zipfian: the hot terms serialize on a few tasks), while the
+      // census partial-aggregates map-side down to one row per distinct
+      // term and the tf frame's exchange is REUSED by both consumers
+      // (same canonical subtree), so tf computes once. No broadcast
+      // hint: the census has one row per distinct term, and vocabulary
+      // grows with the corpus (typos, URLs, ids), so AQE picks the join
+      // from the census's measured size.
       val dfCensus = tf.groupBy(col("term"))
         .agg(count(lit(1)).as("df"))
       val scored = tf
-        .join(broadcast(dfCensus), Seq("term"))
+        .join(dfCensus, Seq("term"))
         .crossJoin(broadcast(nDocs))
         .withColumn("score", round(col("tf") *
           (log((col("n") + lit(1.0)) / (col("df") + lit(1.0))) + lit(1.0)), 4))

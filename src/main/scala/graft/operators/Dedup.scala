@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for a 100 TB training-data pipeline, over any
-  * table with (id, text) columns. Four tiers, cheapest first:
+  * table with (id, text) columns. Text tiers, cheapest first:
   *
   *  1. [[exact]] — hash-groupBy on a text digest. One shuffle keyed by
   *     the digest; at scale the digest (16 bytes) shuffles, never the
@@ -15,15 +17,18 @@ import org.apache.spark.sql.functions._
   *     stop-shingles (df > maxShingleDf) are dropped, which is what keeps
   *     the self-join from going quadratic on boilerplate at scale.
   *  3. [[minHashLsh]] — MinHash signatures + banded LSH. Signature is
-  *     computed row-locally (one pass over shingles, k permutations);
-  *     candidates come from groupBy on (band, bandHash) buckets — only
+  *     computed row-locally (one pass over shingles, k-perm or OPH);
+  *     candidates come from (band, [[bandBucket]]) buckets — only
   *     bucket-mates join, so the shuffle is O(n·bands), not O(n²).
   *  4. [[simHash]] — 64-bit SimHash with hamming-ball candidate search
-  *     via 4×16-bit chunk buckets (any pair within hamming distance 3
-  *     shares at least one exact chunk by pigeonhole).
+  *     via [[hammingPairs]]' multi-table keys, by default chunks = 6:
+  *     20 tables × 32-bit keys (any pair within hamming distance 3
+  *     shares at least one table key by pigeonhole).
   *
-  * All return candidate/duplicate PAIRS (a < b) so callers choose their
-  * keep policy; [[exact]] also returns the keeper directly.
+  * Beside them: [[repeatedSpans]], [[decontaminate]], the embedding and
+  * audio tiers, and [[components]]/[[keepPolicy]]. The pair tiers
+  * return PAIRS (a < b) so callers choose their keep policy; [[exact]]
+  * also returns the keeper directly.
   */
 object Dedup {
 
@@ -46,12 +51,10 @@ object Dedup {
         org.apache.spark.sql.execution.FormattedMode))
     df
   }
-  private[graft] def drainCapturedPlans(): Seq[(String, String)] = {
-    val b = Seq.newBuilder[(String, String)]
-    var m = capturedPlans.poll()
-    while (m != null) { b += m; m = capturedPlans.poll() }
-    b.result()
-  }
+  private[graft] def drainCapturedPlans(): Seq[(String, String)] =
+    drain(capturedPlans)
+  private def drain[T](q: java.util.Queue[T]): Seq[T] =
+    Iterator.continually(q.poll()).takeWhile(_ != null).toSeq
 
   /** Scale-adaptive fan-out for the expensive row-local stages (guide
     * §2.2/§2.5 "input skew": one huge unsplittable file → repartition
@@ -100,16 +103,23 @@ object Dedup {
     }
   }
 
-  /** Populate a persisted frame's cache with ONE dedicated pass. A
-    * persisted-but-unmaterialized frame referenced by several subtrees
-    * of one action gets its partitions computed CONCURRENTLY by racing
-    * stages (each stage finds the cache cold and recomputes), so an
-    * expensive upstream (decode+FFT, signatures, simhash) can execute
-    * 2-3x despite the persist. One cheap count() serializes the cache
-    * fill; every downstream stage then reads memory. Only worth it when
-    * the upstream pass dominates the extra job's ~50 ms overhead. */
-  private def materialize[T](ds: org.apache.spark.sql.Dataset[T]):
-      org.apache.spark.sql.Dataset[T] = { ds.count(); ds }
+  /** The one operator-owned cache lifetime: persist `ds` at
+    * MEMORY_AND_DISK, optionally `fill` it, run `body`, unpersist in
+    * `finally` — a long-lived session accumulates no cached partitions
+    * across calls, and a body that throws leaks none. What `body`
+    * returns must not read the cache: the eager tiers localCheckpoint
+    * their (small) survivor pairs inside it.
+    *
+    * `fill` runs ONE count() first. A persisted-but-unmaterialized frame
+    * referenced by several subtrees of one action gets its partitions
+    * computed CONCURRENTLY by racing stages, so an expensive upstream
+    * can execute 2-3x despite the persist; the fill costs a ~50 ms job,
+    * so only sites whose upstream pass dominates that take it. */
+  private def cached[T, R](ds: Dataset[T], fill: Boolean)(
+      body: Dataset[T] => R): R = {
+    val c = ds.persist(StorageLevel.MEMORY_AND_DISK)
+    try { if (fill) c.count(); body(c) } finally c.unpersist()
+  }
 
   /** Integral-id guard for the pair tiers: a string id would
     * cast-to-null, null out the `a < b` pair filter, and return an
@@ -185,10 +195,7 @@ object Dedup {
     // pathology measured 16 s → 1.4 s in decontaminate). Blank/null
     // texts carry no shingles to compare (TextStats.shingles returns
     // the empty set, so the degenerate "" shingle can't pair every
-    // empty doc with every other). Persisted because THREE subtrees
-    // reference it (df census, pruned a-side, pruned b-side);
-    // operator-owned persist + eager-checkpoint + unpersist lifecycle,
-    // same policy as minHashLsh.
+    // empty doc with every other).
     // HASHED inverted index (guide §2.3 "shuffle keys and metadata
     // instead of payloads"): the index carries fnv64(shingle) — 8 fixed
     // bytes — instead of the n-char string; the df census, prune join
@@ -197,58 +204,55 @@ object Dedup {
     // to 64-bit collisions (~(distinct shingles)²/2^65 ≈ 1e-7 for a
     // million-shingle corpus; the output (a, b, jaccard) carries no
     // shingle, so only a collision could shift a value).
-    val inv = fanOut(df.select(longId(df, idCol).as("id"),
+    // Cached because THREE subtrees reference the index (df census,
+    // pruned a-side, pruned b-side); no fill pass, because the
+    // broadcast build of `rare` fills it first.
+    val index = fanOut(df.select(longId(df, idCol).as("id"),
       col(textCol).as("text"))).as[(Long, String)]
       .flatMap { case (id, text) =>
         graft.lid.TextStats.shingleHashes(text, n).iterator
           .map(h => (id, h))
       }.toDF("id", "shingle")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // fractional form: one countDistinct over the (persisted) inverted
-    // index derives the absolute cap — see the scaladoc scaling rule
-    val dfCap =
-      if (maxShingleDfFrac > 0.0) {
-        val nDocs = inv.select(countDistinct($"id")).head.getLong(0)
-        math.max(1L, math.ceil(maxShingleDfFrac * nDocs).toLong)
-      } else maxShingleDf
-    val rare = inv.groupBy($"shingle").agg(count(lit(1)).as("df"))
-      .filter($"df" <= dfCap).select($"shingle")
-    // pruned is referenced by THREE subtrees (sz census, a-side, b-side)
-    // and embeds the rare-shingle groupBy — persisted AND cache-filled
-    // with one dedicated pass (materialize): the three subtrees of the
-    // eager output job otherwise race the cold cache and re-run the
-    // shingle pass + census + join up to 3x (the broadcast build of
-    // `rare` fills inv's cache first, so inv needs no extra pass)
-    val pruned = materialize(inv.join(rare, Seq("shingle"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val sz = pruned.groupBy($"id").agg(count(lit(1)).as("sz"))
-    // Pair generation stays the a⋈b SELF-JOIN, not a grouped posting
-    // list: both were A/B-measured alternating inside one JVM
-    // (apps/ProfileNgramPairs, the only protocol that beats this host's
-    // ambient noise) and the whole-stage-codegen join + partial
-    // aggregate beat the posting-list flatMap by ~1.4x on the
-    // dedup_text_keep instance (selfjoin 1.8-2.5 s vs posting
-    // 3.2-4.4 s end-to-end) — encoding millions of pair tuples through
-    // a typed Dataset boundary costs more than the join's second
-    // traversal of the (cached) pruned index. Guide §1.1's warning in
-    // action: the "ideal one-shuffle" rewrite measured slower.
-    val a = pruned.select($"id".as("a"), $"shingle")
-    val b = pruned.select($"id".as("b"), $"shingle")
-    val out = a.join(b, Seq("shingle"))
-      .filter($"a" < $"b")
-      .groupBy($"a", $"b")
-      .agg(count(lit(1)).as("common"))
-      .join(sz.select($"id".as("a"), $"sz".as("sza")), Seq("a"))
-      .join(sz.select($"id".as("b"), $"sz".as("szb")), Seq("b"))
-      .withColumn("jaccard",
-        round($"common" / ($"sza" + $"szb" - $"common"), 4))
-      .filter($"jaccard" >= threshold)
-      .select($"a", $"b", $"jaccard")
-      .transform(capturePlan("ngram_jaccard", _))
-      .localCheckpoint(eager = true)
-    inv.unpersist()
-    pruned.unpersist()
-    out
+    cached(index, fill = false) { inv =>
+      // fractional form: one countDistinct over the (cached) inverted
+      // index derives the absolute cap — see the scaladoc scaling rule
+      val dfCap =
+        if (maxShingleDfFrac > 0.0) {
+          val nDocs = inv.select(countDistinct($"id")).head.getLong(0)
+          math.max(1L, math.ceil(maxShingleDfFrac * nDocs).toLong)
+        } else maxShingleDf
+      val rare = inv.groupBy($"shingle").agg(count(lit(1)).as("df"))
+        .filter($"df" <= dfCap).select($"shingle")
+      // pruned is referenced by THREE subtrees (sz census, a-side,
+      // b-side) and embeds the rare-shingle groupBy — filled first, or
+      // the three subtrees of the output job race the cold cache and
+      // re-run the shingle pass + census + join up to 3x
+      cached(inv.join(rare, Seq("shingle")), fill = true) { pruned =>
+        val sz = pruned.groupBy($"id").agg(count(lit(1)).as("sz"))
+        // Pair generation stays the a⋈b SELF-JOIN, not a grouped
+        // posting list: A/B-measured alternating inside one JVM
+        // (apps/ProfileNgramPairs), the whole-stage-codegen join +
+        // partial aggregate beat the posting-list flatMap by ~1.4x on
+        // the dedup_text_keep instance (selfjoin 1.8-2.5 s vs posting
+        // 3.2-4.4 s end-to-end) — encoding millions of pair tuples
+        // through a typed Dataset boundary costs more than the join's
+        // second traversal of the (cached) pruned index.
+        val a = pruned.select($"id".as("a"), $"shingle")
+        val b = pruned.select($"id".as("b"), $"shingle")
+        a.join(b, Seq("shingle"))
+          .filter($"a" < $"b")
+          .groupBy($"a", $"b")
+          .agg(count(lit(1)).as("common"))
+          .join(sz.select($"id".as("a"), $"sz".as("sza")), Seq("a"))
+          .join(sz.select($"id".as("b"), $"sz".as("szb")), Seq("b"))
+          .withColumn("jaccard",
+            round($"common" / ($"sza" + $"szb" - $"common"), 4))
+          .filter($"jaccard" >= threshold)
+          .select($"a", $"b", $"jaccard")
+          .transform(capturePlan("ngram_jaccard", _))
+          .localCheckpoint(eager = true)
+      }
+    }
   }
 
   /** Benchmark decontamination — the training-pipeline gate that keeps
@@ -392,7 +396,10 @@ object Dedup {
     require(m == "all" || m == "star",
       s"pairMode must be 'all' or 'star', got '$m'")
 
-  /** Clique-safe in-bucket candidate generation (`pairMode = "star"`):
+  /** In-bucket candidate pairs (a < b) of `buckets` (`id` plus the
+    * bucket `keys`), each `carry` column c riding along as ca and cb.
+    * `pairMode = "all"` pairs every two bucket-mates (a self-join on the
+    * keys). Clique-safe `pairMode = "star"`:
     * each bucket member pairs ONLY with its bucket's minimal id, so a
     * bucket of size k emits k-1 candidate pairs instead of C(k,2). The
     * transitive closure of a star equals that of the clique, so every
@@ -417,14 +424,41 @@ object Dedup {
     * bucket partition — ONE exchange keyed by the bucket columns and a
     * partition-local min, instead of the earlier groupBy + join-back
     * (a second traversal of the bucket frame probing a broadcast of
-    * the minima). The shuffle carries (keys, id) only either way; the
-    * window form removes the aggregate job + broadcast build. */
-  private def starPairs(buckets: DataFrame, keys: Seq[String]): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-    buckets.withColumn("a", min(col("id")).over(w))
-      .filter(col("id") > col("a"))
-      .select(col("a"), col("id").as("b"))
+    * the minima). The shuffle carries (keys, id, carry) only either
+    * way; the window form removes the aggregate job + broadcast build. */
+  private def bucketPairs(buckets: DataFrame, keys: Seq[String],
+      pairMode: String, carry: Seq[String] = Nil): DataFrame =
+    if (pairMode == "star") {
+      val w = Window.partitionBy(keys.map(col): _*)
+      // a bare min(id) when nothing rides along: min(struct(id)) would
+      // order a null id first and filter the whole bucket out
+      val m =
+        if (carry.isEmpty) struct(min(col("id")).over(w).as("id"))
+        else min(struct(("id" +: carry).map(col): _*)).over(w)
+      buckets.withColumn("m", m)
+        .filter(col("id") > col("m.id"))
+        .select(col("m.id").as("a") +: col("id").as("b") +:
+          carry.flatMap(c => Seq(col(s"m.$c").as(c + "a"), col(c).as(c + "b"))): _*)
+    } else {
+      def side(s: String) = buckets.select(keys.map(col) ++
+        (col("id").as(s) +: carry.map(c => col(c).as(c + s))): _*)
+      side("a").join(side("b"), keys).filter(col("a") < col("b"))
+        .drop(keys: _*)
+    }
+
+  /** [[bucketPairs]]' star across a probe ball (the vector tiers): each probe
+    * row (a, va, pb) pairs only with the minimal (id, vec) of the bucket
+    * it probes; the min's own probes still reach neighbour buckets, so
+    * [[components]] stays connected. Returns (a, b, va, vb), a < b; two
+    * minima within one probe of each other pair twice. */
+  private def probeStar(probes: DataFrame, rows: DataFrame, bucket: String,
+      vec: String): DataFrame = {
+    val mins = rows.groupBy(col(bucket).as("pb"))
+      .agg(min(struct(col("id"), col(vec))).as("m"))
+      .select(col("pb"), col("m.id").as("b"), col(s"m.$vec").as("vb"))
+    probes.join(mins, Seq("pb")).filter(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("a"),
+        greatest(col("a"), col("b")).as("b"), col("va"), col("vb"))
   }
 
   // ------------------------------------------------- LSH observability
@@ -448,12 +482,7 @@ object Dedup {
     new java.util.concurrent.ConcurrentLinkedQueue[LshMetrics]()
 
   /** Drain all metrics recorded since the last drain (FIFO). */
-  def drainLshMetrics(): Seq[LshMetrics] = {
-    val b = Seq.newBuilder[LshMetrics]
-    var m = lshMetricsQueue.poll()
-    while (m != null) { b += m; m = lshMetricsQueue.poll() }
-    b.result()
-  }
+  def drainLshMetrics(): Seq[LshMetrics] = drain(lshMetricsQueue)
 
   /** Drained metrics as a frame — the lineage/metrics-table adapter. */
   def lshMetricsDf(spark: SparkSession): DataFrame = {
@@ -461,20 +490,26 @@ object Dedup {
     spark.createDataset(drainLshMetrics()).toDF()
   }
 
-  /** ONE two-level aggregate over the (persisted/slim) bucket frame:
-    * per-bucket counts, then the corpus-level counters. Cost is a
-    * counter shuffle keyed by the bucket columns — the same key the
-    * candidate join shuffles on. */
+  /** ONE two-level aggregate over a (cached/slim) bucket frame:
+    * per-bucket counts, then the corpus-level counters n_rows,
+    * n_buckets, max_bucket, ap2 (Σ size·(size-1) = 2 × all-pairs
+    * candidates) and star (Σ (size-1)). Cost is a counter shuffle keyed
+    * by the bucket columns — the same key the candidate join uses. */
+  private def bucketCounts(buckets: DataFrame, keys: Seq[String]): Row = {
+    val n = col("n")
+    buckets.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n"))
+      .agg(coalesce(sum(n), lit(0L)).as("n_rows"),
+        count(lit(1)).as("n_buckets"),
+        coalesce(max(n), lit(0L)).as("max_bucket"),
+        coalesce(sum(n * (n - 1)), lit(0L)).as("ap2"),
+        coalesce(sum(n - 1), lit(0L)).as("star"))
+      .head()
+  }
+
   private def recordLshMetrics(tier: String, pairMode: String,
       buckets: DataFrame, keys: Seq[String], survivors: Long): Unit = {
-    val r = buckets.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n"))
-      .agg(coalesce(sum(col("n")), lit(0L)).as("n_rows"),
-        count(lit(1)).as("n_buckets"),
-        coalesce(max(col("n")), lit(0L)).as("max_bucket"),
-        coalesce(sum(col("n") * (col("n") - 1)), lit(0L)).as("ap2"),
-        coalesce(sum(col("n") - 1), lit(0L)).as("star"))
-      .head()
+    val r = bucketCounts(buckets, keys)
     val allPairs = r.getAs[Long]("ap2") / 2
     lshMetricsQueue.add(LshMetrics(tier, pairMode,
       r.getAs[Long]("n_rows"), r.getAs[Long]("n_buckets"),
@@ -623,7 +658,7 @@ object Dedup {
     * is the intended contract for a dedup tier: its output is always
     * consumed in full by components/keep-policy.
     *
-    * `pairMode` — see [[starPairs]]: "all" (default, the oracle mode)
+    * `pairMode` — see [[bucketPairs]]: "all" (default, the oracle mode)
     * emits every in-bucket pair; "star" pairs each bucket member only
     * with the bucket minimum, turning a k-doc near-identical clique
     * (mirrored boilerplate — routine in web-scale crawls) from C(k,2)
@@ -649,57 +684,47 @@ object Dedup {
     val sigFn: Array[Long] => Array[Long] =
       if (oph) signatureOphOfHashes(_, numHashes, bands)
       else signatureOfHashes(_, numHashes)
-    // persisted: the signature map is referenced by THREE subtrees
-    // (bucket explode + both post-distinct joins) — without persist the
-    // k-hash-per-shingle computation re-executes once per subtree.
+    // cached and filled: the signature map is referenced by THREE
+    // subtrees (bucket explode + both post-distinct joins) — uncached,
+    // the k-hash-per-shingle computation re-executes once per subtree.
     // Empty shingle sets (null/blank text) are excluded: they would all
     // share the identical sentinel signature and pair with est = 1.0.
-    val sigs = materialize(fanOut(df.select(longId(df, idCol).as("id"),
+    val signed = fanOut(df.select(longId(df, idCol).as("id"),
       col(textCol).as("text"))).as[(Long, String)]
       .map { case (id, text) =>
         val sh = graft.lid.TextStats.shingleHashes(text, n)
         SigRow(id, if (sh.isEmpty) null else sigFn(sh))
       }
       .filter(_.sig != null)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // band → bucket key; only bucket-mates meet in the join. The exploded
-    // side carries ONLY (band, bucket, id) — shuffling the 64-long
-    // signature bands× per doc (~8 KB/doc) dominated the exchange at
-    // scale; signatures are re-joined once per side AFTER the pair
-    // distinct, when candidates are few. The bucket is [[bandBucket]]'s
-    // multilinear Mersenne hash (not Spark's Murmur3 `hash()`) so the
-    // DuckDB oracle reproduces candidate generation exactly.
-    val coefs = Array.tabulate(numHashes)(bucketCoef)
-    val buckets = sigs.flatMap { r =>
-      Iterator.tabulate(bands)(b => (r.id, b, bandBucket(r.sig, b, rowsPerBand, coefs)))
-    }.toDF("id", "band", "bucket")
-    val pairs = (pairMode match {
-      case "star" => starPairs(buckets, Seq("band", "bucket"))
-      case _ => buckets.select($"band", $"bucket", $"id".as("a"))
-        .join(buckets.select($"band", $"bucket", $"id".as("b")),
-          Seq("band", "bucket"))
-        .filter($"a" < $"b")
-        .select($"a", $"b")
-    }).distinct()
-    val out = pairs
-      .join(sigs.select($"id".as("a"), $"sig".as("siga")), "a")
-      .join(sigs.select($"id".as("b"), $"sig".as("sigb")), "b")
-      .withColumn("est_jaccard", round(
-        graft.functions.VectorOps.eqCount($"siga", $"sigb")
-          / lit(numHashes.toDouble), 4))
-      .select($"a", $"b", $"est_jaccard")
-      .filter($"est_jaccard" >= threshold)
-      .transform(capturePlan("minhash_lsh", _))
-      // materialize the (small) survivor pairs, then RELEASE the
-      // signature cache — the operator owns the persist, so it must own
-      // the unpersist too, or a long-lived session accumulates cached
-      // signature partitions across calls with no release path
-      .localCheckpoint(eager = true)
-    if (collectMetrics)
-      recordLshMetrics("minhash_lsh" + (if (oph) "_oph" else ""), pairMode,
-        buckets.toDF(), Seq("band", "bucket"), out.count())
-    sigs.unpersist()
-    out
+    cached(signed, fill = true) { sigs =>
+      // band → bucket key; only bucket-mates meet in the join. The
+      // exploded side carries ONLY (band, bucket, id) — shuffling the
+      // 64-long signature bands× per doc (~8 KB/doc) dominated the
+      // exchange at scale; signatures are re-joined once per side AFTER
+      // the pair distinct, when candidates are few. The bucket is
+      // [[bandBucket]]'s multilinear Mersenne hash (not Spark's Murmur3
+      // `hash()`) so the DuckDB oracle reproduces candidate generation
+      // exactly.
+      val coefs = Array.tabulate(numHashes)(bucketCoef)
+      val buckets = sigs.flatMap { r =>
+        Iterator.tabulate(bands)(b => (r.id, b, bandBucket(r.sig, b, rowsPerBand, coefs)))
+      }.toDF("id", "band", "bucket")
+      val out = bucketPairs(buckets, Seq("band", "bucket"), pairMode)
+        .distinct()
+        .join(sigs.select($"id".as("a"), $"sig".as("siga")), "a")
+        .join(sigs.select($"id".as("b"), $"sig".as("sigb")), "b")
+        .withColumn("est_jaccard", round(
+          graft.functions.VectorOps.eqCount($"siga", $"sigb")
+            / lit(numHashes.toDouble), 4))
+        .select($"a", $"b", $"est_jaccard")
+        .filter($"est_jaccard" >= threshold)
+        .transform(capturePlan("minhash_lsh", _))
+        .localCheckpoint(eager = true)
+      if (collectMetrics)
+        recordLshMetrics("minhash_lsh" + (if (oph) "_oph" else ""), pairMode,
+          buckets.toDF(), Seq("band", "bucket"), out.count())
+      out
+    }
   }
 
   /** Cross-document repeated spans via winnowing fingerprints
@@ -742,7 +767,12 @@ object Dedup {
     *    when bit-for-bit SQL reproducibility isn't needed. Selection
     *    differs from md5 mode (different hash ⇒ different minima) but
     *    the winnowing guarantee is identical, because equal content
-    *    gives equal hashes in any mode. */
+    *    gives equal hashes in any mode.
+    *
+    * Precondition: `idCol` is unique — one row per document, as every
+    * pair tier assumes of its id. `n_docs` counts rows, so a document
+    * id repeated over k rows counts k times and can lift a span past
+    * `minDocs`; derive a unique id first if the input has repeats. */
   def repeatedSpans(df: DataFrame, idCol: String, textCol: String,
       window: Int = 40, guarantee: Int = 8,
       minDocs: Int = 2, hashMode: String = "md5"): DataFrame = {
@@ -861,11 +891,12 @@ object Dedup {
     selected.toDF("id", "span")
       .groupBy($"span")
       // count, NOT countDistinct: the winnow emits each (id, span) at
-      // most once per doc by construction (per-doc LinkedHashSet dedup
-      // above), so plain count ≡ distinct-doc count — and it drops the
-      // two-phase distinct-aggregate expansion (partial dedup on
-      // (span, id) + re-aggregate) from the plan: one partial-agg
-      // exchange keyed by span instead.
+      // most once per ROW by construction (per-doc LinkedHashSet dedup
+      // above), so under the unique-id precondition (scaladoc) plain
+      // count ≡ distinct-doc count — and it drops the two-phase
+      // distinct-aggregate expansion (partial dedup on (span, id) +
+      // re-aggregate) from the plan: one partial-agg exchange keyed by
+      // span instead.
       .agg(count(lit(1)).as("n_docs"), min($"id").as("first_doc"))
       .filter($"n_docs" >= minDocs)
       .select($"span", $"n_docs", $"first_doc")
@@ -896,29 +927,27 @@ object Dedup {
     val cands = minHashLsh(df, idCol, textCol, n, numHashes, bands,
       candidateThreshold, pairMode = pairMode).select($"a", $"b")
     // shingle ONLY the candidate ids (semi-join first — candidates are
-    // few by construction, the corpus is not), and persist so the two
-    // join sides share one shingling pass instead of re-running
-    // normText+shingleCol over the corpus once per side. Operator owns
-    // persist AND unpersist (same cache-lifetime policy as minHashLsh).
+    // few by construction, the corpus is not), cached so the two join
+    // sides share one shingling pass instead of re-running
+    // normText+shingleCol over the corpus once per side
     val candIds = cands.select($"a".as("id"))
       .union(cands.select($"b".as("id"))).distinct()
-    val sh = df.select(longId(df, idCol).as("id"),
+    val shingled = df.select(longId(df, idCol).as("id"),
       normText(col(textCol)).as("t"))
       .join(candIds, Seq("id"), "left_semi")
       .select(col("id"), shingleCol(col("t"), n).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = cands
-      .join(sh.select($"id".as("a"), $"sh".as("sha")), "a")
-      .join(sh.select($"id".as("b"), $"sh".as("shb")), "b")
-      .withColumn("jaccard",
-        round(size(array_intersect($"sha", $"shb")).cast("double") /
-          size(array_union($"sha", $"shb")), 4))
-      .filter($"jaccard" >= threshold)
-      .select($"a", $"b", $"jaccard")
-      .transform(capturePlan("minhash_verified", _))
-      .localCheckpoint(eager = true)
-    sh.unpersist()
-    out
+    cached(shingled, fill = false) { sh =>
+      cands
+        .join(sh.select($"id".as("a"), $"sh".as("sha")), "a")
+        .join(sh.select($"id".as("b"), $"sh".as("shb")), "b")
+        .withColumn("jaccard",
+          round(size(array_intersect($"sha", $"shb")).cast("double") /
+            size(array_union($"sha", $"shb")), 4))
+        .filter($"jaccard" >= threshold)
+        .select($"a", $"b", $"jaccard")
+        .transform(capturePlan("minhash_verified", _))
+        .localCheckpoint(eager = true)
+    }
   }
 
   /** Embedding-cosine near-dup pairs against an anchor subset (exact).
@@ -981,12 +1010,10 @@ object Dedup {
     * sampling (the benchmarked `dedup_embedding_lsh` query documents
     * exactly that trade at 8).
     *
-    * `pairMode = "star"` ([[starPairs]] semantics): each probe pairs
-    * only with its target bucket's minimal (id, vec) — O(n·planes)
-    * candidate output even when a million near-identical vectors share
-    * one bucket. The min's own probes still enter the hamming-1
-    * neighbor buckets, so cross-bucket connectivity for [[components]]
-    * is preserved. */
+    * `pairMode = "star"` ([[probeStar]]): each probe pairs only with
+    * its target bucket's minimal (id, vec) — O(n·planes) candidate
+    * output even when a million near-identical vectors share one
+    * bucket. */
   def embeddingCosineLsh(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, threshold: Double, planes: Int = 0,
       multiProbe: Boolean = true, pairMode: String = "all",
@@ -1009,19 +1036,8 @@ object Dedup {
       explode(probes).as("pb"))
     val candidates = pairMode match {
       case "star" =>
-        val mins = v.groupBy($"bucket".as("pb"))
-          .agg(min(struct($"id", $"vec")).as("m"))
-          .select($"pb", $"m.id".as("b"), $"m.vec".as("vb"))
-        // dropDuplicates: two bucket-minima within hamming 1 of each
-        // other pair TWICE (each probes the other's bucket); after the
-        // least/greatest normalization that is the same (a, b) row, and
-        // unlike the text tiers there is no trailing distinct here —
-        // va/vb ride along (same pair => same vectors, possibly
-        // swapped, which the symmetric cosine doesn't see)
-        a.join(mins, Seq("pb")).filter($"a" =!= $"b")
-          .select(least($"a", $"b").as("a"), greatest($"a", $"b").as("b"),
-            $"va", $"vb")
-          .dropDuplicates("a", "b")
+        // (a, b) once; its va/vb may be swapped, which cosine ignores
+        probeStar(a, v, "bucket", "vec").dropDuplicates("a", "b")
       case _ =>
         val b = v.select($"id".as("b"), $"vec".as("vb"),
           $"bucket".as("pb"))
@@ -1078,44 +1094,45 @@ object Dedup {
     * distributed tier with driverMaxEdges = 0 and asserts equality). */
   def components(pairs: DataFrame, maxIter: Int = 20,
       driverMaxEdges: Long = 1L << 20): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    import org.apache.spark.storage.StorageLevel
-    // symmetric edge list (propagation must flow both directions)
-    val edges = pairs.select(longId(pairs, "a").as("id"),
+    // symmetric edge list (propagation must flow both directions);
+    // cached without a fill — the bounded probe below is its first job
+    val symmetric = pairs.select(longId(pairs, "a").as("id"),
       longId(pairs, "b").as("nbr"))
       .union(pairs.select(longId(pairs, "b").as("id"),
         longId(pairs, "a").as("nbr")))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // tier probe and small-tier fetch in ONE bounded job: collect at
-    // most driverMaxEdges+1 rows — if the limit truncated, the graph is
-    // big and the distributed loop takes over (edges stays persisted
-    // for it); otherwise we already hold the whole edge list. Never an
-    // unbounded collect.
-    // probe.length < cap, NOT <= driverMaxEdges: when driverMaxEdges
-    // >= Int.MaxValue the limit() clamps to Int.MaxValue rows, and a
-    // graph with more edges would satisfy `probe.length <=
-    // driverMaxEdges` on a TRUNCATED edge list — silently wrong
-    // components. A full probe (== cap) always falls through to the
-    // distributed tier instead.
-    val cap = math.min(driverMaxEdges + 1, Int.MaxValue.toLong).toInt
-    val probe = if (cap > 0) edges.limit(cap).collect() else Array.empty[org.apache.spark.sql.Row]
-    if (probe.length < cap) {
-      val arr = probe.map(r => (r.getLong(0), r.getLong(1)))
-      edges.unpersist()
-      // explicit schema + Rows, not a product-encoder toDF: keeps the
-      // construction free of TypeTag reflection (REPL-safe) and makes
-      // the non-null long schema explicit
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      driverComponents(arr).foreach { case (id, label) =>
-        rows.add(org.apache.spark.sql.Row(id, label))
-      }
-      import org.apache.spark.sql.types._
-      return spark.createDataFrame(rows, StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("label", LongType, nullable = false))))
+    cached(symmetric, fill = false) { edges =>
+      // tier probe and small-tier fetch in ONE bounded job: collect at
+      // most driverMaxEdges+1 rows — if the limit truncated, the graph
+      // is big and the distributed loop takes over; otherwise we
+      // already hold the whole edge list. Never an unbounded collect.
+      // probe.length < cap, NOT <= driverMaxEdges: when driverMaxEdges
+      // >= Int.MaxValue the limit() clamps to Int.MaxValue rows, and a
+      // graph with more edges would satisfy `probe.length <=
+      // driverMaxEdges` on a TRUNCATED edge list — silently wrong
+      // components. A full probe (== cap) always falls through to the
+      // distributed tier instead.
+      val cap = math.min(driverMaxEdges + 1, Int.MaxValue.toLong).toInt
+      val probe = if (cap > 0) edges.limit(cap).collect() else Array.empty[Row]
+      if (probe.length < cap) {
+        // explicit schema + Rows, not a product-encoder toDF: keeps the
+        // construction free of TypeTag reflection (REPL-safe) and makes
+        // the non-null long schema explicit
+        val rows = new java.util.ArrayList[Row]()
+        driverComponents(probe.map(r => (r.getLong(0), r.getLong(1))))
+          .foreach { case (id, label) => rows.add(Row(id, label)) }
+        import org.apache.spark.sql.types._
+        pairs.sparkSession.createDataFrame(rows, StructType(Seq(
+          StructField("id", LongType, nullable = false),
+          StructField("label", LongType, nullable = false))))
+      } else propagateLabels(edges, maxIter)
     }
+  }
+
+  /** [[components]]' distributed tier; its labels are checkpointed, so
+    * they outlive the cached `edges`. */
+  private def propagateLabels(edges: DataFrame, maxIter: Int): DataFrame = {
+    import edges.sparkSession.implicits._
     var labels = edges.groupBy($"id")
       .agg(min($"nbr").as("mn"))
       .select($"id", least($"id", $"mn").as("label"))
@@ -1166,7 +1183,6 @@ object Dedup {
       prevSum = s
       iter += 1
     }
-    edges.unpersist()
     labels
   }
 
@@ -1358,53 +1374,36 @@ object Dedup {
         "chunks or raise maxHamming-adjacent block width instead")
     val spark = hashes.sparkSession
     import spark.implicits._
-    // persisted: BOTH candidate-join sides (and in star mode the
-    // bucket-min aggregate) re-derive from `hashes`, and Spark plans the
-    // self-join as two executions of the upstream subtree — without the
-    // persist the caller's hash computation (simhash64 over every
-    // shingle of every doc) runs once PER SIDE. The cached frame is
-    // (id, sh) = 16 bytes/row; eager-checkpoint + unpersist below, the
-    // same operator-owned cache lifecycle as minHashLsh.
-    val hcached = hashes
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val chunked = hcached.select($"id", $"sh",
-      posexplode(array(tableKeys($"sh", maxHamming, chunks): _*))
-        .as(Seq("tbl", "ck")))
-    // hamming-filter BEFORE the pair distinct: bucket-mates are quadratic
-    // in bucket size, survivors are few — the distinct shuffle should
-    // only carry survivors (hamming is deterministic per pair, so
-    // filter-then-distinct ≡ distinct-then-filter)
-    val verified = pairMode match {
-      case "star" =>
-        // bucket min as a WINDOW aggregate (same shape change as
-        // [[starPairs]]): min(struct(id, sh)) over the (tbl, ck)
-        // partition carries the min's hash along — one exchange +
-        // partition-local min instead of groupBy + join-back
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy($"tbl", $"ck")
-        chunked.withColumn("m", min(struct($"id", $"sh")).over(w))
-          .filter($"id" > $"m.id")
-          .withColumn("hamming", bit_count($"m.sh".bitwiseXOR($"sh")))
-          .select($"m.id".as("a"), $"id".as("b"), $"hamming")
-      case _ =>
-        val a = chunked.select($"tbl", $"ck", $"id".as("a"), $"sh".as("sha"))
-        val b = chunked.select($"tbl", $"ck", $"id".as("b"), $"sh".as("shb"))
-        a.join(b, Seq("tbl", "ck")).filter($"a" < $"b")
-          .withColumn("hamming", bit_count($"sha".bitwiseXOR($"shb")))
-          .select($"a", $"b", $"hamming")
+    // cached: BOTH candidate-join sides (and in star mode the bucket-min
+    // window) re-derive from `hashes`, and Spark plans the self-join as
+    // two executions of the upstream subtree — uncached, the caller's
+    // hash computation (simhash64 over every shingle of every doc) runs
+    // once PER SIDE. The cached frame is (id, sh) = 16 bytes/row.
+    cached(hashes, fill = false) { hcached =>
+      val chunked = tableBuckets(hcached, maxHamming, chunks)
+      // hamming-filter BEFORE the pair distinct: bucket-mates are
+      // quadratic in bucket size, survivors are few — the distinct
+      // shuffle should only carry survivors (hamming is deterministic
+      // per pair, so filter-then-distinct ≡ distinct-then-filter)
+      val out = bucketPairs(chunked, Seq("tbl", "ck"), pairMode, Seq("sh"))
+        .withColumn("hamming", bit_count($"sha".bitwiseXOR($"shb")))
+        .filter($"hamming" <= maxHamming)
+        .select($"a", $"b", $"hamming").distinct()
+        .transform(capturePlan("hamming_pairs", _))
+        .localCheckpoint(eager = true)
+      if (collectMetrics)
+        recordLshMetrics("hamming_multitable", pairMode,
+          chunked, Seq("tbl", "ck"), -1L)
+      out
     }
-    val out = verified.filter($"hamming" <= maxHamming)
-      .select($"a", $"b", $"hamming").distinct()
-      .transform(capturePlan("hamming_pairs", _))
-      // EAGER like minHashLsh: materialize the (small) survivor pairs so
-      // the operator can release its hash cache before returning
-      .localCheckpoint(eager = true)
-    if (collectMetrics)
-      recordLshMetrics("hamming_multitable", pairMode,
-        chunked, Seq("tbl", "ck"), -1L)
-    hcached.unpersist()
-    out
   }
+
+  /** (id, sh, tbl, ck): one row per hash per multi-table key. */
+  private def tableBuckets(hashes: DataFrame, maxHamming: Int,
+      chunks: Int): DataFrame =
+    hashes.select(col("id"), col("sh"),
+      posexplode(array(tableKeys(col("sh"), maxHamming, chunks): _*))
+        .as(Seq("tbl", "ck")))
 
   /** Σ over buckets of C(size, 2) — the exact in-bucket verify-join
     * fan-out [[hammingPairs]] would pay (before the hamming filter and
@@ -1414,44 +1413,10 @@ object Dedup {
   def hammingCandidateCount(hashes: DataFrame, maxHamming: Int = 3,
       chunks: Int = 4): Long = {
     require(maxHamming <= chunks - 1)
-    val spark = hashes.sparkSession
-    import spark.implicits._
-    hashes.select($"id",
-      posexplode(array(tableKeys($"sh", maxHamming, chunks): _*))
-        .as(Seq("tbl", "ck")))
-      .groupBy($"tbl", $"ck").agg(count(lit(1)).as("n"))
-      .agg(coalesce(sum($"n" * ($"n" - 1)), lit(0L)))
-      .head.getLong(0) / 2
+    bucketCounts(tableBuckets(hashes, maxHamming, chunks), Seq("tbl", "ck"))
+      .getAs[Long]("ap2") / 2
   }
 
-  /** Audio near-dup pairs — the waveform analog of
-    * [[embeddingCosineLsh]]: decode each clip in the narrow map stage,
-    * reduce it to a volume-invariant normalized band-energy vector
-    * ([[graft.codec.Fft.bandEnergies]]), bucket by the PEAK band with
-    * ±1 multi-probe on one join side (spectral leakage or codec noise
-    * can shift a borderline peak by one band — recall is guaranteed for
-    * any pair whose peaks differ by ≤1), then verify candidates with
-    * exact cosine of the band vectors, keeping pairs ≥ `threshold`. No
-    * false positives beyond the cosine definition — only recall loss
-    * for pairs whose peaks moved ≥2 bands, which at SNR ≥ 30 dB does
-    * not happen (FftSpec measures the μ-law/noise envelope).
-    * Undecodable or all-silent clips are isolated out of candidate
-    * generation. EAGER like [[minHashLsh]]: survivor pairs materialize
-    * inside the call so the decoded-feature cache can be released.
-    * At scale: one narrow O(n·frames·log frameLen) pass,
-    * then a shuffle keyed by peak band carrying (id, band, nBands
-    * doubles) ≈ 0.5 KB/row — never an all-pairs waveform compare.
-    * Single-tone-heavy corpora make SOME bands hot; that skew is the
-    * data's (clips sharing a peak band genuinely are near-dup
-    * candidates), and the in-bucket verify is a cheap codegen'd dot
-    * product. When one band DOES dominate (monotone corpora — hold
-    * music, test tones), `saltBuckets > 1` spreads each band's bucket
-    * over that many reducer tasks: the probe side salts
-    * deterministically from its own id ([[Skew.saltFrom]]), the build
-    * side replicates once per salt, so every (a, b) pair still meets in
-    * exactly one (band, salt) bucket — output is IDENTICAL to unsalted
-    * (DedupSpec asserts equality), only the task-size distribution
-    * changes. Default 1 = unsalted plan, byte-for-byte the r3 shape. */
   /** Offset-robust audio duplicate matching via spectral-peak landmark
     * fingerprints ([[graft.codec.Fft.peakLandmarks]], Wang 2003): a copy
     * that is time-SHIFTED (leading silence, trimmed intro, concatenation
@@ -1487,7 +1452,8 @@ object Dedup {
     import spark.implicits._
     require(maxHashDfFrac <= 1.0,
       s"maxHashDfFrac is a fraction of the corpus, got $maxHashDfFrac")
-    val lm = materialize(fanOut(df.select(longId(df, idCol).as("id"),
+    // the one expensive map (decode + landmarks), cached and filled
+    val landmarks = fanOut(df.select(longId(df, idCol).as("id"),
       col(codecCol).as("codec"), col(bytesCol).as("bytes")))
       .as[(Long, String, Array[Byte])]
       .flatMap { case (id, codec, bytes) =>
@@ -1509,47 +1475,73 @@ object Dedup {
       // full extra shuffle+aggregate of every landmark row that could
       // never change a single row (measured ~0.6 s of the operator at
       // sf0.1 scale, pure overhead).
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val hashCap =
-      if (maxHashDfFrac > 0.0) {
-        val nClips = lm.select(countDistinct($"id")).head.getLong(0)
-        math.max(1L, math.ceil(maxHashDfFrac * nClips).toLong)
-      } else maxHashDf
-    val rare = lm.groupBy($"hash")
-      .agg(countDistinct($"id").as("df"))
-      .filter($"df" <= hashCap).select($"hash")
-    // persisted AND cache-filled with one dedicated pass: BOTH
-    // self-join sides derive from pruned, and the eager output job's
-    // two sides otherwise race the cold cache and run the lm⋈rare join
-    // twice; same operator-owned lifecycle as lm
-    val pruned = materialize(lm.join(rare, Seq("hash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // Pair generation stays the a⋈b SELF-JOIN: the grouped-posting-list
-    // rewrite was A/B-measured alternating in one JVM
-    // (apps/ProfileAudioPairs) and lost by ~25% (selfjoin 0.99-1.03 s
-    // vs posting 1.22-1.26 s for pair stage + delta histogram + argmax)
-    // — the typed flatMap's tuple encoding outweighs the join's second
-    // cached-index traversal, same verdict as ngramJaccard's A/B.
-    val a = pruned.select($"hash", $"id".as("a"), $"t1".as("ta"))
-    val b = pruned.select($"hash", $"id".as("b"), $"t1".as("tb"))
-    val out = a.join(b, Seq("hash"))
-      .filter($"a" < $"b")
-      .groupBy($"a", $"b", ($"ta" - $"tb").as("delta"))
-      .agg(count(lit(1)).as("cnt"))
-      // dominant delta per pair: max(struct) ties break toward the
-      // larger delta — deterministic
-      .groupBy($"a", $"b")
-      .agg(max(struct($"cnt", $"delta")).as("best"))
-      .select($"a", $"b", $"best.cnt".as("matches"),
-        $"best.delta".as("frame_offset"))
-      .filter($"matches" >= minMatches)
-      .transform(capturePlan("audio_fingerprint", _))
-      .localCheckpoint(eager = true) // release the landmark cache below
-    lm.unpersist()
-    pruned.unpersist()
-    out
+    cached(landmarks, fill = true) { lm =>
+      val hashCap =
+        if (maxHashDfFrac > 0.0) {
+          val nClips = lm.select(countDistinct($"id")).head.getLong(0)
+          math.max(1L, math.ceil(maxHashDfFrac * nClips).toLong)
+        } else maxHashDf
+      val rare = lm.groupBy($"hash")
+        .agg(countDistinct($"id").as("df"))
+        .filter($"df" <= hashCap).select($"hash")
+      // filled too: BOTH self-join sides derive from pruned, and the
+      // output job's two sides otherwise race the cold cache and run
+      // the lm⋈rare join twice
+      cached(lm.join(rare, Seq("hash")), fill = true) { pruned =>
+        // Pair generation stays the a⋈b SELF-JOIN: the grouped-posting-
+        // list rewrite was A/B-measured alternating in one JVM
+        // (apps/ProfileAudioPairs) and lost by ~25% (selfjoin 0.99-1.03 s
+        // vs posting 1.22-1.26 s for pair stage + delta histogram +
+        // argmax) — the typed flatMap's tuple encoding outweighs the
+        // join's second cached-index traversal, same verdict as
+        // ngramJaccard's A/B.
+        val a = pruned.select($"hash", $"id".as("a"), $"t1".as("ta"))
+        val b = pruned.select($"hash", $"id".as("b"), $"t1".as("tb"))
+        a.join(b, Seq("hash"))
+          .filter($"a" < $"b")
+          .groupBy($"a", $"b", ($"ta" - $"tb").as("delta"))
+          .agg(count(lit(1)).as("cnt"))
+          // dominant delta per pair: max(struct) ties break toward the
+          // larger delta — deterministic
+          .groupBy($"a", $"b")
+          .agg(max(struct($"cnt", $"delta")).as("best"))
+          .select($"a", $"b", $"best.cnt".as("matches"),
+            $"best.delta".as("frame_offset"))
+          .filter($"matches" >= minMatches)
+          .transform(capturePlan("audio_fingerprint", _))
+          .localCheckpoint(eager = true)
+      }
+    }
   }
 
+  /** Audio near-dup pairs — the waveform analog of
+    * [[embeddingCosineLsh]]: decode each clip in the narrow map stage,
+    * reduce it to a volume-invariant normalized band-energy vector
+    * ([[graft.codec.Fft.bandEnergies]]), bucket by the PEAK band with
+    * ±1 multi-probe on one join side (spectral leakage or codec noise
+    * can shift a borderline peak by one band — recall is guaranteed for
+    * any pair whose peaks differ by ≤1), then verify candidates with
+    * exact cosine of the band vectors, keeping pairs ≥ `threshold`. No
+    * false positives beyond the cosine definition — only recall loss
+    * for pairs whose peaks moved ≥2 bands, which at SNR ≥ 30 dB does
+    * not happen (FftSpec measures the μ-law/noise envelope).
+    * Undecodable or all-silent clips are isolated out of candidate
+    * generation. EAGER like [[minHashLsh]]: survivor pairs materialize
+    * inside the call so the decoded-feature cache can be released.
+    * At scale: one narrow O(n·frames·log frameLen) pass,
+    * then a shuffle keyed by peak band carrying (id, band, nBands
+    * doubles) ≈ 0.5 KB/row — never an all-pairs waveform compare.
+    * Single-tone-heavy corpora make SOME bands hot; that skew is the
+    * data's (clips sharing a peak band genuinely are near-dup
+    * candidates), and the in-bucket verify is a cheap codegen'd dot
+    * product. When one band DOES dominate (monotone corpora — hold
+    * music, test tones), `saltBuckets > 1` spreads each band's bucket
+    * over that many reducer tasks: the probe side salts
+    * deterministically from its own id ([[Skew.saltFrom]]), the build
+    * side replicates once per salt, so every (a, b) pair still meets in
+    * exactly one (band, salt) bucket — output is IDENTICAL to unsalted
+    * (DedupSpec asserts equality), only the task-size distribution
+    * changes. Default 1 = unsalted plan, byte-for-byte the r3 shape. */
   def audioNearDup(df: DataFrame, idCol: String, bytesCol: String,
       codecCol: String, threshold: Double = 0.95,
       nBands: Int = 64, saltBuckets: Int = 1,
@@ -1559,7 +1551,7 @@ object Dedup {
     val spark = df.sparkSession
     graft.functions.VectorOps.register(spark)
     import spark.implicits._
-    val feats = fanOut(df.select(longId(df, idCol).as("id"),
+    val features = fanOut(df.select(longId(df, idCol).as("id"),
       col(codecCol).as("codec"), col(bytesCol).as("bytes")))
       .as[(Long, String, Array[Byte])]
       .map { case (id, codec, bytes) =>
@@ -1571,64 +1563,55 @@ object Dedup {
       }
       .toDF("id", "pk", "bands")
       .filter($"pk" >= 0)
-      // persisted: referenced by BOTH join sides — without it every
-      // clip decodes + FFTs twice (same reasoning as the minHashLsh
-      // signature persist). NO materialize pass here (r6, measured):
-      // the band-energy map is cheap enough that the racing fill's
-      // duplicated work is concurrent and wall-time-free, while the
-      // dedicated count job cost a consistent ~0.3 s per call
-      // (dedup_audio_neardup 0.63 -> 0.96 s in full-bench context);
-      // the expensive-decode tiers (landmarks) keep theirs.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a0 = feats.select($"id".as("a"), $"bands".as("ba"),
-      explode(array($"pk" - 1, $"pk", $"pk" + 1)).as("pb"))
-    val b0 = feats.select($"id".as("b"), $"bands".as("bb"), $"pk".as("pb"))
-    // star mode ([[starPairs]] semantics, audio flavor): each prober
-    // pairs only with the minimal (id, bands) of each exact peak-band
-    // bucket in its ±1 probe window — O(n) candidates even when one
-    // template's clips flood a band. Salting is an ALL-pairs knob (it
-    // spreads a hot bucket's quadratic join); star has no quadratic to
-    // spread and min() is a partial aggregate (map-side combine eats
-    // hot keys), so the salt path applies to all-pairs mode only.
-    val candidates = pairMode match {
-      case "star" =>
-        val mins = feats.groupBy($"pk".as("pb"))
-          .agg(min(struct($"id", $"bands")).as("m"))
-          .select($"pb", $"m.id".as("b"), $"m.bands".as("bb"))
-        a0.join(mins, Seq("pb")).filter($"a" =!= $"b")
-          .select(least($"a", $"b").as("a"), greatest($"a", $"b").as("b"),
-            $"ba", $"bb")
-      case _ =>
-        val (a, b, joinKeys) =
-          if (saltBuckets == 1) (a0, b0, Seq("pb"))
-          else (
-            a0.withColumn("slt", Skew.saltFrom($"a", saltBuckets)),
-            b0.withColumn("slt",
-              explode(sequence(lit(0), lit(saltBuckets - 1)))),
-            Seq("pb", "slt"))
-        a.join(b, joinKeys).filter($"a" < $"b")
+    // cached: referenced by BOTH join sides — uncached, every clip
+    // decodes + FFTs twice. NO fill pass here (r6, measured): the
+    // band-energy map is cheap enough that the racing fill's duplicated
+    // work is concurrent and wall-time-free, while the dedicated count
+    // job cost a consistent ~0.3 s per call (dedup_audio_neardup 0.63
+    // -> 0.96 s in full-bench context); the expensive-decode tiers
+    // (landmarks) keep theirs.
+    cached(features, fill = false) { feats =>
+      val a0 = feats.select($"id".as("a"), $"bands".as("va"),
+        explode(array($"pk" - 1, $"pk", $"pk" + 1)).as("pb"))
+      val b0 = feats.select($"id".as("b"), $"bands".as("vb"), $"pk".as("pb"))
+      // star mode ([[probeStar]]): each prober pairs only with the
+      // minimal (id, bands) of each exact peak-band bucket in its ±1
+      // probe window — O(n) candidates even when one template's clips
+      // flood a band. Salting is an ALL-pairs knob (it spreads a hot
+      // bucket's quadratic join); star has no quadratic to spread and
+      // min() is a partial aggregate (map-side combine eats hot keys),
+      // so the salt path applies to all-pairs mode only.
+      val candidates = pairMode match {
+        case "star" => probeStar(a0, feats, "pk", "bands")
+        case _ =>
+          val (a, b, joinKeys) =
+            if (saltBuckets == 1) (a0, b0, Seq("pb"))
+            else (
+              a0.withColumn("slt", Skew.saltFrom($"a", saltBuckets)),
+              b0.withColumn("slt",
+                explode(sequence(lit(0), lit(saltBuckets - 1)))),
+              Seq("pb", "slt"))
+          a.join(b, joinKeys).filter($"a" < $"b")
+      }
+      val out = candidates
+        // band vectors are L2-normalized, so cosine = dot (symmetric,
+        // so the star branch's possible va/vb swap after least/greatest
+        // is invisible; the trailing distinct absorbs mutual-min
+        // duplicates)
+        .withColumn("sim",
+          round(graft.functions.VectorOps.dot($"va", $"vb"), 4))
+        .filter($"sim" >= threshold)
+        .select($"a", $"b", $"sim")
+        .distinct()
+        .transform(capturePlan("audio_neardup", _))
+        .localCheckpoint(eager = true)
+      if (collectMetrics)
+        // bucket = the exact peak band (the ±1 probe fan-out triples the
+        // candidate counts reported here in both modes — the counters
+        // trend the clique growth, which lives in the exact buckets)
+        recordLshMetrics("audio_neardup", pairMode,
+          feats.select($"id", $"pk"), Seq("pk"), out.count())
+      out
     }
-    val out = candidates
-      // band vectors are L2-normalized, so cosine = dot (symmetric, so
-      // the star branch's possible ba/bb swap after least/greatest is
-      // invisible; the trailing distinct absorbs mutual-min duplicates)
-      .withColumn("sim",
-        round(graft.functions.VectorOps.dot($"ba", $"bb"), 4))
-      .filter($"sim" >= threshold)
-      .select($"a", $"b", $"sim")
-      .distinct()
-      .transform(capturePlan("audio_neardup", _))
-      // materialize survivors, release the decoded-feature cache (same
-      // cache-lifetime policy as minHashLsh: persist + unpersist both
-      // live inside the operator)
-      .localCheckpoint(eager = true)
-    if (collectMetrics)
-      // bucket = the exact peak band (the ±1 probe fan-out triples the
-      // candidate counts reported here in both modes — the counters
-      // trend the clique growth, which lives in the exact buckets)
-      recordLshMetrics("audio_neardup", pairMode,
-        feats.select($"id", $"pk"), Seq("pk"), out.count())
-    feats.unpersist()
-    out
   }
 }

@@ -707,6 +707,38 @@ class DedupSpec extends AnyFunSuite {
       Dedup.ngramJaccard(docs, "doc_id", "text", maxShingleDfFrac = 1.5)
     }
   }
+
+  test("a tier whose input throws mid-job leaves no cached frame behind") {
+    // row 7's column fails while the tier fills its cache; the operator
+    // must still release every frame it persisted before rethrowing
+    val bad = 7L
+    val words = base // a local: the UDF must not capture the suite
+    val text = udf { (id: Long) =>
+      if (id == bad) throw new IllegalStateException(s"bad row $id")
+      s"$words ${id % 3}"
+    }
+    val clip = graft.codec.Audio.pcm16Encode(SparkEntry.melodyClip(7L))
+    val bytes = udf { (id: Long) =>
+      if (id == bad) throw new IllegalStateException(s"bad row $id")
+      clip
+    }
+    val texts = spark.range(20).select($"id".as("doc_id"),
+      text($"id").as("text"))
+    val clips = spark.range(20).select($"id", lit("pcm_s16le").as("codec"),
+      bytes($"id").as("bytes"))
+    val sc = spark.sparkContext
+    def leaves(tier: String)(run: => Any): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      intercept[org.apache.spark.SparkException](run)
+      val leaked = sc.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"$tier leaked cached RDDs $leaked")
+    }
+    leaves("ngramJaccard")(Dedup.ngramJaccard(texts, "doc_id", "text"))
+    leaves("minHashLsh")(Dedup.minHashLsh(texts, "doc_id", "text"))
+    leaves("simHash")(Dedup.simHash(texts, "doc_id", "text"))
+    leaves("audioFingerprintMatch")(
+      Dedup.audioFingerprintMatch(clips, "id", "bytes", "codec"))
+  }
 }
 
 class SimilaritySpec extends AnyFunSuite {
