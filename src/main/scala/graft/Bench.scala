@@ -1,13 +1,14 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.catalog.{Catalog, Query}
 
 /** Benchmark main (driver contract). Two parts:
   *
   *  1. Flagship clip pipeline: synthesize SPARK_GRAFT_CLIPS clips
   *     (default 240k) and run stage1→1b→2→3 end-to-end; reports
   *     clips/sec — the BASELINE.json headline metric.
-  *  2. The SparkEntry query suite over SPARK_GRAFT_SF_DIR (pipeline_*
+  *  2. The catalog query suite over SPARK_GRAFT_SF_DIR (pipeline_*
   *     entries excluded — part 1 already measures the pipeline).
   *
   * Prints ONE JSON line:
@@ -19,15 +20,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nClips = sys.env.getOrElse("SPARK_GRAFT_CLIPS", "240000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session("graft-bench", cpus)
     import spark.implicits._
 
     // ---- 0a. input mode. "gen" (default) synthesizes clips inside the
@@ -36,7 +29,6 @@ object Bench {
     // clip table first (matches BASELINE.json.input_hint literally) and
     // times scan+pipeline; on this sandbox's virtual disk the scan is
     // IO-bound and does not reflect engine scaling.
-    graft.lid.LidModels.default
     val inputMode = sys.env.getOrElse("SPARK_GRAFT_INPUT", "gen")
     val clips =
       if (inputMode == "table") {
@@ -73,13 +65,7 @@ object Bench {
     // only need the pipeline clips/s and the suite is wasted work there)
     val runSuite = sys.env.getOrElse("SPARK_GRAFT_SUITE", "1") != "0"
     if (runSuite) {
-      // scan warmup, same rationale as the 20k-clip pipeline warmup: the
-      // first parquet touch pays footer reads + codegen compile that a
-      // steady-state job amortizes; without it the alphabetically-first
-      // query (a12) absorbs ~1.6 s that belongs to no query
-      Seq("documents", "embeddings", "lineitem", "orders", "events",
-        "customer", "supplier", "part", "nation", "region")
-        .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+      warmScans(spark, sfDir)
       // window/rollup codegen warmup — the first window query otherwise
       // pays the whole-stage compile for the Window/Expand operators
       locally {
@@ -94,14 +80,14 @@ object Bench {
     }
     val results =
       if (!runSuite) Seq.empty
-      else SparkEntry.queries.toSeq.sortBy(_._1)
-        .filterNot(_._1.startsWith("pipeline_"))
-        .map { case (name, fn) =>
+      else Catalog.all.sortBy(_.name)
+        .filterNot(_.name.startsWith("pipeline_"))
+        .map { case Query(name, run, _) =>
           val q0 = System.nanoTime()
           // a failed query must be VISIBLE in the output, not recorded
           // as a (short, flattering) timing: negative seconds = failed
           val ok =
-            try { fn(spark, sfDir).count(); true }
+            try { run(spark, sfDir).count(); true }
             catch {
               case scala.util.control.NonFatal(e) =>
                 System.err.println(s"BENCH-FAIL $name: " +
@@ -120,4 +106,30 @@ object Bench {
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"clips":$nClips,"clips_per_sec":$clipsPerSec%.1f,"scrubbed":$scrubbed,"metric_rows":$metricRows,"cpus":$cpus,"sf":"$sfDir"}""")
     spark.stop()
   }
+
+  /** The session of the timing mains ([[Bench]], [[BenchExtra]]):
+    * local[cpus], shuffle partitions = cpus, AQE on, UTC; the LID models
+    * load here, outside every timed window. */
+  private[graft] def session(app: String, cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(app)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    graft.lid.LidModels.default
+    spark
+  }
+
+  /** Scan warmup, same rationale as the 20k-clip pipeline warmup: the
+    * first parquet touch pays footer reads + codegen compile that a
+    * steady-state job amortizes; without it the alphabetically-first
+    * query (a12) absorbs ~1.6 s that belongs to no query. */
+  private[graft] def warmScans(spark: SparkSession, sfDir: String): Unit =
+    Seq("documents", "embeddings", "lineitem", "orders", "events",
+      "customer", "supplier", "part", "nation", "region")
+      .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
 }

@@ -1,13 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round helper (guide §1): per-query repeated timing and
   * formatted-plan dumps OUTSIDE the frozen driver contract of
-  * [[Bench]]. Same session config as Bench (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions = cpus, AQE on) so numbers are comparable; the
-  * timed action is the same `.count()` Bench uses, plus an optional
-  * noop-sink isolation mode that materializes every column.
+  * [[Bench]]. Same session as Bench ([[Bench.session]]) so numbers are
+  * comparable; the timed action is the same `.count()` Bench uses, plus
+  * an optional noop-sink isolation mode that materializes every column.
   *
   * Usage (via sbt runMain):
   *   graft.BenchExtra time <reps> <query> [query ...]
@@ -18,25 +15,13 @@ object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.lid.LidModels.default
+    val spark = Bench.session("graft-bench-extra", cpus)
     val mode = args(0)
     mode match {
       case "time" | "noop" =>
         val reps = args(1).toInt
         val names = args.drop(2).toSeq
-        // same scan warmup as Bench so first-touch costs stay out
-        Seq("documents", "embeddings", "lineitem", "orders", "events",
-          "customer", "supplier", "part", "nation", "region")
-          .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+        Bench.warmScans(spark, sfDir)
         names.foreach { n =>
           val fn = SparkEntry.queries(n)
           val ts = (1 to reps).map { _ =>

@@ -1,7 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+import scala.util.control.NonFatal
+import graft.catalog.Catalog
+/** Driver-run correctness dump: each catalog query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -18,21 +20,29 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    dump(spark, sfDir, outDir, only)
+    spark.stop()
+  }
+
+  /** Writes each catalog query over `sfDir` (all, or those named in
+    * `only`) to `outDir/<name>/` as one parquet file, and every oracle to
+    * `outDir/oracle_sql.json`. A query that fails is logged and its
+    * directory removed. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      only: Option[Set[String]]): Unit = {
     new java.io.File(outDir).mkdirs()
     def deleteRec(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(deleteRec)
       f.delete()
     }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    Catalog.all.filter(q => only.forall(_.contains(q.name))).foreach { q =>
+      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
         // remove any PREVIOUS run's output for this query — leaving it
         // would let the oracle compare validate stale results as a pass
-        val dir = new java.io.File(s"$outDir/$name")
+        val dir = new java.io.File(s"$outDir/${q.name}")
         if (dir.exists) deleteRec(dir)
       }
     }
@@ -48,9 +58,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = Catalog.all.flatMap(x => x.oracle.map(sql => s"${q(x.name)}: ${q(sql)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

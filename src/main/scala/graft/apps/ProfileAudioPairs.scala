@@ -19,7 +19,7 @@ object ProfileAudioPairs {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    val corpus = graft.SparkEntry.audioMelodyCorpus(spark, 1000L)
+    val corpus = graft.model.AudioGen.melodyCorpus(spark, 1000L)
     val lm = corpus.select($"id", $"codec", $"bytes")
       .as[(Long, String, Array[Byte])]
       .flatMap { case (id, codec, bytes) =>

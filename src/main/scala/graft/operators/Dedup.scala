@@ -204,9 +204,14 @@ object Dedup {
     // to 64-bit collisions (~(distinct shingles)²/2^65 ≈ 1e-7 for a
     // million-shingle corpus; the output (a, b, jaccard) carries no
     // shingle, so only a collision could shift a value).
-    // Cached because THREE subtrees reference the index (df census,
-    // pruned a-side, pruned b-side); no fill pass, because the
-    // broadcast build of `rare` fills it first.
+    // Cached: the df census and the prune join both read it (plus the
+    // fractional doc count). No fill pass — `pruned`'s fill count first
+    // materializes the cached index as an AQE query stage of its own, so
+    // it is built once per call (per-job trace of dedup_corpus, seed 9).
+    // AQE may broadcast either side of the prune join (the index, 8.3
+    // MiB there, also fits the threshold); broadcasting the index leaves
+    // `pruned` partitioned by shingle, and the sz census and pair
+    // aggregate then shuffle more (6.42 vs 6.15 MiB per call).
     val index = fanOut(df.select(longId(df, idCol).as("id"),
       col(textCol).as("text"))).as[(Long, String)]
       .flatMap { case (id, text) =>

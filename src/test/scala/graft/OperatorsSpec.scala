@@ -76,13 +76,13 @@ class DedupSpec extends AnyFunSuite {
       "with the exact frame offset; band-energy cosine cannot") {
     // original melody (id 0), copy delayed by exactly 2 hops and scaled
     // (id 1), unrelated melody (id 2)
-    val orig = SparkEntry.melodyClip(7L)
+    val orig = graft.model.AudioGen.melodyClip(7L)
     val shifted = new Array[Short](orig.length)
     var i = 512
     while (i < orig.length) {
       shifted(i) = (orig(i - 512) * 0.7).toShort; i += 1
     }
-    val other = SparkEntry.melodyClip(99L)
+    val other = graft.model.AudioGen.melodyClip(99L)
     val df = Seq(
       (0L, "pcm_s16le", graft.codec.Audio.pcm16Encode(orig)),
       (1L, "pcm_s16le", graft.codec.Audio.pcm16Encode(shifted)),
@@ -101,7 +101,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("audio fingerprint match: time-shift invariance of the hash set " +
       "(same landmarks, anchors displaced by the shift)") {
-    val orig = SparkEntry.melodyClip(11L)
+    val orig = graft.model.AudioGen.melodyClip(11L)
     val shifted = new Array[Short](orig.length)
     var i = 512
     while (i < orig.length) { shifted(i) = orig(i - 512); i += 1 }
@@ -717,7 +717,7 @@ class DedupSpec extends AnyFunSuite {
       if (id == bad) throw new IllegalStateException(s"bad row $id")
       s"$words ${id % 3}"
     }
-    val clip = graft.codec.Audio.pcm16Encode(SparkEntry.melodyClip(7L))
+    val clip = graft.codec.Audio.pcm16Encode(graft.model.AudioGen.melodyClip(7L))
     val bytes = udf { (id: Long) =>
       if (id == bad) throw new IllegalStateException(s"bad row $id")
       clip
