@@ -160,6 +160,31 @@ object Dedup {
       sequence(lit(1), greatest(length(normCol) - (n - 1), lit(1))),
       i => normCol.substr(i, lit(n))))
 
+  /** The df-pruned posting index of [[ngramJaccard]] and
+    * [[audioFingerprintMatch]], cached and filled (both self-join sides
+    * read it), passed to `body`: the rows of `index` (id, `key`) whose
+    * doc frequency `docFreq` is at most `maxDf`, or max(1, ceil(maxDfFrac
+    * · distinct ids)) when `maxDfFrac > 0`. The prune is a LEFT SEMI join
+    * on the rare keys (the rows of an inner join, `rare` being one
+    * distinct column), which never builds the index side: while `rare`
+    * broadcasts, `pruned` keeps the index's partitioning. */
+  private def prunedPostings[R](index: DataFrame, fillIndex: Boolean,
+      key: String, docFreq: Column, maxDf: Long, maxDfFrac: Double)(
+      body: DataFrame => R): R = {
+    require(maxDfFrac <= 1.0,
+      s"the df cap fraction is a fraction of the corpus, got $maxDfFrac")
+    cached(index, fillIndex) { inv =>
+      val cap =
+        if (maxDfFrac > 0.0) {
+          val nDocs = inv.select(countDistinct(col("id"))).head.getLong(0)
+          math.max(1L, math.ceil(maxDfFrac * nDocs).toLong)
+        } else maxDf
+      val rare = inv.groupBy(col(key)).agg(docFreq.as("df"))
+        .filter(col("df") <= cap).select(col(key))
+      cached(inv.join(rare, Seq(key), "left_semi"), fill = true)(body)
+    }
+  }
+
   /** N-gram Jaccard pairs >= threshold over the DF-PRUNED shingle space:
     * shingles appearing in more than `maxShingleDf` docs (stop-shingles —
     * boilerplate, shared vocabulary) are removed BEFORE both the set
@@ -186,8 +211,6 @@ object Dedup {
       maxShingleDfFrac: Double = 0.0): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    require(maxShingleDfFrac <= 1.0,
-      s"maxShingleDfFrac is a fraction of the corpus, got $maxShingleDfFrac")
     // Typed flatMap, NOT explode(shingleCol(normText-projection)):
     // CollapseProject inlines the normalization regex into the
     // per-element substr lambda and the generator-pruning filter
@@ -204,59 +227,42 @@ object Dedup {
     // to 64-bit collisions (~(distinct shingles)²/2^65 ≈ 1e-7 for a
     // million-shingle corpus; the output (a, b, jaccard) carries no
     // shingle, so only a collision could shift a value).
-    // Cached: the df census and the prune join both read it (plus the
-    // fractional doc count). No fill pass — `pruned`'s fill count first
-    // materializes the cached index as an AQE query stage of its own, so
-    // it is built once per call (per-job trace of dedup_corpus, seed 9).
-    // AQE may broadcast either side of the prune join (the index, 8.3
-    // MiB there, also fits the threshold); broadcasting the index leaves
-    // `pruned` partitioned by shingle, and the sz census and pair
-    // aggregate then shuffle more (6.42 vs 6.15 MiB per call).
+    // No index fill: `pruned`'s fill count builds it once, as an AQE
+    // query stage of its own. While the rare shingles broadcast (as at
+    // sf0.01), the left-semi prune keeps the index's partitioning, so the
+    // sz census and pair aggregate shuffle the same bytes every run.
+    // Each (id, shingle) row is distinct, so count is the doc frequency.
     val index = fanOut(df.select(longId(df, idCol).as("id"),
       col(textCol).as("text"))).as[(Long, String)]
       .flatMap { case (id, text) =>
         graft.lid.TextStats.shingleHashes(text, n).iterator
           .map(h => (id, h))
       }.toDF("id", "shingle")
-    cached(index, fill = false) { inv =>
-      // fractional form: one countDistinct over the (cached) inverted
-      // index derives the absolute cap — see the scaladoc scaling rule
-      val dfCap =
-        if (maxShingleDfFrac > 0.0) {
-          val nDocs = inv.select(countDistinct($"id")).head.getLong(0)
-          math.max(1L, math.ceil(maxShingleDfFrac * nDocs).toLong)
-        } else maxShingleDf
-      val rare = inv.groupBy($"shingle").agg(count(lit(1)).as("df"))
-        .filter($"df" <= dfCap).select($"shingle")
-      // pruned is referenced by THREE subtrees (sz census, a-side,
-      // b-side) and embeds the rare-shingle groupBy — filled first, or
-      // the three subtrees of the output job race the cold cache and
-      // re-run the shingle pass + census + join up to 3x
-      cached(inv.join(rare, Seq("shingle")), fill = true) { pruned =>
-        val sz = pruned.groupBy($"id").agg(count(lit(1)).as("sz"))
-        // Pair generation stays the a⋈b SELF-JOIN, not a grouped
-        // posting list: A/B-measured alternating inside one JVM
-        // (apps/ProfileNgramPairs), the whole-stage-codegen join +
-        // partial aggregate beat the posting-list flatMap by ~1.4x on
-        // the dedup_text_keep instance (selfjoin 1.8-2.5 s vs posting
-        // 3.2-4.4 s end-to-end) — encoding millions of pair tuples
-        // through a typed Dataset boundary costs more than the join's
-        // second traversal of the (cached) pruned index.
-        val a = pruned.select($"id".as("a"), $"shingle")
-        val b = pruned.select($"id".as("b"), $"shingle")
-        a.join(b, Seq("shingle"))
-          .filter($"a" < $"b")
-          .groupBy($"a", $"b")
-          .agg(count(lit(1)).as("common"))
-          .join(sz.select($"id".as("a"), $"sz".as("sza")), Seq("a"))
-          .join(sz.select($"id".as("b"), $"sz".as("szb")), Seq("b"))
-          .withColumn("jaccard",
-            round($"common" / ($"sza" + $"szb" - $"common"), 4))
-          .filter($"jaccard" >= threshold)
-          .select($"a", $"b", $"jaccard")
-          .transform(capturePlan("ngram_jaccard", _))
-          .localCheckpoint(eager = true)
-      }
+    prunedPostings(index, fillIndex = false, "shingle", count(lit(1)),
+        maxShingleDf, maxShingleDfFrac) { pruned =>
+      val sz = pruned.groupBy($"id").agg(count(lit(1)).as("sz"))
+      // Pair generation stays the a⋈b SELF-JOIN, not a grouped
+      // posting list: A/B-measured alternating inside one JVM
+      // (apps/ProfileNgramPairs), the whole-stage-codegen join +
+      // partial aggregate beat the posting-list flatMap by ~1.4x on
+      // the dedup_text_keep instance (selfjoin 1.8-2.5 s vs posting
+      // 3.2-4.4 s end-to-end) — encoding millions of pair tuples
+      // through a typed Dataset boundary costs more than the join's
+      // second traversal of the (cached) pruned index.
+      val a = pruned.select($"id".as("a"), $"shingle")
+      val b = pruned.select($"id".as("b"), $"shingle")
+      a.join(b, Seq("shingle"))
+        .filter($"a" < $"b")
+        .groupBy($"a", $"b")
+        .agg(count(lit(1)).as("common"))
+        .join(sz.select($"id".as("a"), $"sz".as("sza")), Seq("a"))
+        .join(sz.select($"id".as("b"), $"sz".as("szb")), Seq("b"))
+        .withColumn("jaccard",
+          round($"common" / ($"sza" + $"szb" - $"common"), 4))
+        .filter($"jaccard" >= threshold)
+        .select($"a", $"b", $"jaccard")
+        .transform(capturePlan("ngram_jaccard", _))
+        .localCheckpoint(eager = true)
     }
   }
 
@@ -465,6 +471,18 @@ object Dedup {
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"), col("va"), col("vb"))
   }
+
+  /** The candidate pairs of the vector tiers: probe rows (a, va, pb)
+    * meet the `rows` (id, `vec`, `bucket`) of the bucket they probe.
+    * `"star"` is [[probeStar]]; `"all"` pairs each probe with every row
+    * of that bucket, a < b, joined on `pb` and the further `keys` both
+    * sides carry. Returns a, b, va, vb. */
+  private def probePairs(probes: DataFrame, rows: DataFrame, bucket: String,
+      vec: String, pairMode: String, keys: Seq[String] = Nil): DataFrame =
+    if (pairMode == "star") probeStar(probes, rows, bucket, vec)
+    else probes.join(rows.select(Seq(col("id").as("b"), col(vec).as("vb"),
+        col(bucket).as("pb")) ++ keys.map(col): _*), "pb" +: keys)
+      .filter(col("a") < col("b"))
 
   // ------------------------------------------------- LSH observability
   /** One candidate-generation observability row per LSH run (opt-in via
@@ -1039,15 +1057,9 @@ object Dedup {
           col("bucket").bitwiseXOR(lit(1L << p))): _*)
     val a = v.select($"id".as("a"), $"vec".as("va"),
       explode(probes).as("pb"))
-    val candidates = pairMode match {
-      case "star" =>
-        // (a, b) once; its va/vb may be swapped, which cosine ignores
-        probeStar(a, v, "bucket", "vec").dropDuplicates("a", "b")
-      case _ =>
-        val b = v.select($"id".as("b"), $"vec".as("vb"),
-          $"bucket".as("pb"))
-        a.join(b, Seq("pb")).filter($"a" < $"b")
-    }
+    val candidates = probePairs(a, v, "bucket", "vec", pairMode)
+      // star: (a, b) once; its va/vb may be swapped, which cosine ignores
+      .transform(c => if (pairMode == "star") c.dropDuplicates("a", "b") else c)
     if (collectMetrics)
       recordLshMetrics("embedding_cosine_lsh", pairMode,
         v.select($"id", $"bucket"), Seq("bucket"), -1L)
@@ -1243,18 +1255,20 @@ object Dedup {
   }
 
   // --------------------------------------------------------------- SimHash
-  /** Row-local 64-bit SimHash over char shingles. */
+  /** Row-local 64-bit SimHash: the bit-wise majority vote of the
+    * distinct char-shingle hashes ([[graft.lid.TextStats.shingleHashes]]). */
   def simHash64(text: String, n: Int = 4): Long = {
     val acc = new Array[Int](64)
-    graft.lid.TextStats.shingles(text, n).foreach { s =>
-      var h = 0xcbf29ce484222325L
-      var i = 0
-      while (i < s.length) { h ^= s.charAt(i); h *= 0x100000001b3L; i += 1 }
+    val hs = graft.lid.TextStats.shingleHashes(text, n)
+    var i = 0
+    while (i < hs.length) {
+      val h = hs(i)
       var b = 0
       while (b < 64) {
         if (((h >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1
         b += 1
       }
+      i += 1
     }
     var out = 0L
     var b = 0
@@ -1273,9 +1287,6 @@ object Dedup {
   def simHash(df: DataFrame, idCol: String, textCol: String,
       n: Int = 4, maxHamming: Int = 3, chunks: Int = 6,
       pairMode: String = "all"): DataFrame = {
-    require(maxHamming <= chunks - 1,
-      s"recall guarantee needs maxHamming <= chunks-1 " +
-        s"(pigeonhole); got maxHamming=$maxHamming, chunks=$chunks")
     val spark = df.sparkSession
     graft.functions.SimHashOps.register(spark)
     // native codegen expression, not a typed map: the encoder round-trip
@@ -1310,17 +1321,13 @@ object Dedup {
     out
   }
 
-  /** All size-k index subsets of 0 until n, lexicographic. */
-  private def combinations(n: Int, k: Int): Seq[Seq[Int]] =
-    (0 until n).combinations(k).map(_.toSeq).toSeq
-
   /** Per-table candidate keys for the multi-table hamming scheme
     * (Manku, Jain & Das Sarma 2007): one key per (chunks-maxHamming)-
     * subset of blocks, each key the concatenation of its blocks' bits. */
   private def tableKeys(sh: Column, maxHamming: Int,
       chunks: Int): Seq[Column] = {
     val layout = blockLayout(chunks)
-    combinations(chunks, chunks - maxHamming).map { blocks =>
+    (0 until chunks).combinations(chunks - maxHamming).toSeq.map { blocks =>
       blocks.foldLeft(lit(0L)) { case (acc, b) =>
         val (start, w) = layout(b)
         val mask = if (w == 64) -1L else (1L << w) - 1
@@ -1340,7 +1347,7 @@ object Dedup {
     * maxHamming differing bits touch ≤ maxHamming blocks, so some
     * subset of chunks-maxHamming blocks is untouched and that table's
     * keys match exactly — recall is GUARANTEED for maxHamming ≤
-    * chunks-1 (enforced; beyond it recall would be luck).
+    * chunks-1 (enforced by [[requireTables]]).
     *
     * The chunks knob trades replication for key width: expected
     * candidate pairs ≈ tables · n² / 2^keyBits, with keyBits =
@@ -1361,22 +1368,7 @@ object Dedup {
   def hammingPairs(hashes: DataFrame, maxHamming: Int = 3,
       chunks: Int = 4, pairMode: String = "all",
       collectMetrics: Boolean = false): DataFrame = {
-    require(chunks >= 1 && chunks <= 64, s"chunks must be 1..64, got $chunks")
-    require(maxHamming <= chunks - 1,
-      s"recall guarantee needs maxHamming <= chunks-1 " +
-        s"(pigeonhole); got maxHamming=$maxHamming, chunks=$chunks")
     requirePairMode(pairMode)
-    // replication bound: each row explodes into one key PER TABLE, and
-    // tables = C(chunks, chunks-maxHamming) grows combinatorially
-    // (chunks=64, h=3 would be 41 664 keys/row — a silent memory/shuffle
-    // blowup, not a scale knob). 512 covers every sane configuration
-    // (chunks=8,h=3 → 56; chunks=12,h=4 → 495); beyond it the caller
-    // wants a different scheme, not more tables.
-    val nTables = combinations(chunks, chunks - maxHamming).size
-    require(nTables <= 512,
-      s"C(chunks, chunks-maxHamming) = $nTables tables would replicate " +
-        s"every row ${nTables}x in the explode; cap is 512 — lower " +
-        "chunks or raise maxHamming-adjacent block width instead")
     val spark = hashes.sparkSession
     import spark.implicits._
     // cached: BOTH candidate-join sides (and in star mode the bucket-min
@@ -1403,12 +1395,37 @@ object Dedup {
     }
   }
 
-  /** (id, sh, tbl, ck): one row per hash per multi-table key. */
+  /** The one check of the multi-table parameters: 1 ≤ chunks ≤ 64,
+    * 0 ≤ maxHamming ≤ chunks-1 (pigeonhole), and at most 512 tables —
+    * each row explodes into one key PER TABLE, C(chunks, maxHamming) of
+    * them (chunks=8,h=3 → 56; chunks=12,h=4 → 495; chunks=64,h=3 would
+    * be 41 664). The binomial is multiplied out, C(chunks-h+i, i) at
+    * step i, and stops past the cap: no configuration is enumerated
+    * before it is rejected (C(64, 32) ≈ 1.8·10^18). */
+  private def requireTables(maxHamming: Int, chunks: Int): Unit = {
+    require(chunks >= 1 && chunks <= 64, s"chunks must be 1..64, got $chunks")
+    require(maxHamming >= 0 && maxHamming <= chunks - 1,
+      s"recall guarantee needs 0 <= maxHamming <= chunks-1 " +
+        s"(pigeonhole); got maxHamming=$maxHamming, chunks=$chunks")
+    var t = 1L
+    var i = 1
+    while (i <= maxHamming && t <= 512) {
+      t = t * (chunks - maxHamming + i) / i
+      i += 1
+    }
+    require(t <= 512, s"C($chunks, $maxHamming) > 512 tables would " +
+      "replicate every row once per table; the cap is 512")
+  }
+
+  /** (id, sh, tbl, ck): one row per hash per multi-table key, after
+    * [[requireTables]]. */
   private def tableBuckets(hashes: DataFrame, maxHamming: Int,
-      chunks: Int): DataFrame =
+      chunks: Int): DataFrame = {
+    requireTables(maxHamming, chunks)
     hashes.select(col("id"), col("sh"),
       posexplode(array(tableKeys(col("sh"), maxHamming, chunks): _*))
         .as(Seq("tbl", "ck")))
+  }
 
   /** Σ over buckets of C(size, 2) — the exact in-bucket verify-join
     * fan-out [[hammingPairs]] would pay (before the hamming filter and
@@ -1416,11 +1433,9 @@ object Dedup {
     * quadratic-blowup bound: log it per corpus and raise `chunks` when
     * it trends away from O(n·tables). */
   def hammingCandidateCount(hashes: DataFrame, maxHamming: Int = 3,
-      chunks: Int = 4): Long = {
-    require(maxHamming <= chunks - 1)
+      chunks: Int = 4): Long =
     bucketCounts(tableBuckets(hashes, maxHamming, chunks), Seq("tbl", "ck"))
       .getAs[Long]("ap2") / 2
-  }
 
   /** Offset-robust audio duplicate matching via spectral-peak landmark
     * fingerprints ([[graft.codec.Fft.peakLandmarks]], Wang 2003): a copy
@@ -1455,8 +1470,6 @@ object Dedup {
       maxHashDf: Long = 64, maxHashDfFrac: Double = 0.0): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    require(maxHashDfFrac <= 1.0,
-      s"maxHashDfFrac is a fraction of the corpus, got $maxHashDfFrac")
     // the one expensive map (decode + landmarks), cached and filled
     val landmarks = fanOut(df.select(longId(df, idCol).as("id"),
       col(codecCol).as("codec"), col(bytesCol).as("bytes")))
@@ -1480,42 +1493,32 @@ object Dedup {
       // full extra shuffle+aggregate of every landmark row that could
       // never change a single row (measured ~0.6 s of the operator at
       // sf0.1 scale, pure overhead).
-    cached(landmarks, fill = true) { lm =>
-      val hashCap =
-        if (maxHashDfFrac > 0.0) {
-          val nClips = lm.select(countDistinct($"id")).head.getLong(0)
-          math.max(1L, math.ceil(maxHashDfFrac * nClips).toLong)
-        } else maxHashDf
-      val rare = lm.groupBy($"hash")
-        .agg(countDistinct($"id").as("df"))
-        .filter($"df" <= hashCap).select($"hash")
-      // filled too: BOTH self-join sides derive from pruned, and the
-      // output job's two sides otherwise race the cold cache and run
-      // the lm⋈rare join twice
-      cached(lm.join(rare, Seq("hash")), fill = true) { pruned =>
-        // Pair generation stays the a⋈b SELF-JOIN: the grouped-posting-
-        // list rewrite was A/B-measured alternating in one JVM
-        // (apps/ProfileAudioPairs) and lost by ~25% (selfjoin 0.99-1.03 s
-        // vs posting 1.22-1.26 s for pair stage + delta histogram +
-        // argmax) — the typed flatMap's tuple encoding outweighs the
-        // join's second cached-index traversal, same verdict as
-        // ngramJaccard's A/B.
-        val a = pruned.select($"hash", $"id".as("a"), $"t1".as("ta"))
-        val b = pruned.select($"hash", $"id".as("b"), $"t1".as("tb"))
-        a.join(b, Seq("hash"))
-          .filter($"a" < $"b")
-          .groupBy($"a", $"b", ($"ta" - $"tb").as("delta"))
-          .agg(count(lit(1)).as("cnt"))
-          // dominant delta per pair: max(struct) ties break toward the
-          // larger delta — deterministic
-          .groupBy($"a", $"b")
-          .agg(max(struct($"cnt", $"delta")).as("best"))
-          .select($"a", $"b", $"best.cnt".as("matches"),
-            $"best.delta".as("frame_offset"))
-          .filter($"matches" >= minMatches)
-          .transform(capturePlan("audio_fingerprint", _))
-          .localCheckpoint(eager = true)
-      }
+    // one hash can repeat at different t1 in a clip, so its doc
+    // frequency is a distinct count
+    prunedPostings(landmarks, fillIndex = true, "hash", countDistinct($"id"),
+        maxHashDf, maxHashDfFrac) { pruned =>
+      // Pair generation stays the a⋈b SELF-JOIN: the grouped-posting-
+      // list rewrite was A/B-measured alternating in one JVM
+      // (apps/ProfileAudioPairs) and lost by ~25% (selfjoin 0.99-1.03 s
+      // vs posting 1.22-1.26 s for pair stage + delta histogram +
+      // argmax) — the typed flatMap's tuple encoding outweighs the
+      // join's second cached-index traversal, same verdict as
+      // ngramJaccard's A/B.
+      val a = pruned.select($"hash", $"id".as("a"), $"t1".as("ta"))
+      val b = pruned.select($"hash", $"id".as("b"), $"t1".as("tb"))
+      a.join(b, Seq("hash"))
+        .filter($"a" < $"b")
+        .groupBy($"a", $"b", ($"ta" - $"tb").as("delta"))
+        .agg(count(lit(1)).as("cnt"))
+        // dominant delta per pair: max(struct) ties break toward the
+        // larger delta — deterministic
+        .groupBy($"a", $"b")
+        .agg(max(struct($"cnt", $"delta")).as("best"))
+        .select($"a", $"b", $"best.cnt".as("matches"),
+          $"best.delta".as("frame_offset"))
+        .filter($"matches" >= minMatches)
+        .transform(capturePlan("audio_fingerprint", _))
+        .localCheckpoint(eager = true)
     }
   }
 
@@ -1576,9 +1579,8 @@ object Dedup {
     // -> 0.96 s in full-bench context); the expensive-decode tiers
     // (landmarks) keep theirs.
     cached(features, fill = false) { feats =>
-      val a0 = feats.select($"id".as("a"), $"bands".as("va"),
+      val probes = feats.select($"id".as("a"), $"bands".as("va"),
         explode(array($"pk" - 1, $"pk", $"pk" + 1)).as("pb"))
-      val b0 = feats.select($"id".as("b"), $"bands".as("vb"), $"pk".as("pb"))
       // star mode ([[probeStar]]): each prober pairs only with the
       // minimal (id, bands) of each exact peak-band bucket in its ±1
       // probe window — O(n) candidates even when one template's clips
@@ -1586,18 +1588,14 @@ object Dedup {
       // bucket's quadratic join); star has no quadratic to spread and
       // min() is a partial aggregate (map-side combine eats hot keys),
       // so the salt path applies to all-pairs mode only.
-      val candidates = pairMode match {
-        case "star" => probeStar(a0, feats, "pk", "bands")
-        case _ =>
-          val (a, b, joinKeys) =
-            if (saltBuckets == 1) (a0, b0, Seq("pb"))
-            else (
-              a0.withColumn("slt", Skew.saltFrom($"a", saltBuckets)),
-              b0.withColumn("slt",
-                explode(sequence(lit(0), lit(saltBuckets - 1)))),
-              Seq("pb", "slt"))
-          a.join(b, joinKeys).filter($"a" < $"b")
-      }
+      val candidates =
+        if (pairMode == "all" && saltBuckets > 1)
+          probePairs(
+            probes.withColumn("slt", Skew.saltFrom($"a", saltBuckets)),
+            feats.withColumn("slt",
+              explode(sequence(lit(0), lit(saltBuckets - 1)))),
+            "pk", "bands", pairMode, Seq("slt"))
+        else probePairs(probes, feats, "pk", "bands", pairMode)
       val out = candidates
         // band vectors are L2-normalized, so cosine = dot (symmetric,
         // so the star branch's possible va/vb swap after least/greatest

@@ -34,6 +34,20 @@ object Similarity {
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
   }
 
+  /** The top-k tail of every search here: over candidate rows (qid,
+    * qvec, vid, vec), drops self-matches, scores the rounded cosine and
+    * keeps the `k` best vids per query by (sim desc, vid asc), as
+    * (qid, rank, vid, sim). */
+  private def topK(candidates: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid"))
+      .orderBy(col("sim").desc, col("vid").asc)
+    candidates.filter(col("vid") =!= col("qid"))
+      .withColumn("sim", round(cosine(col("qvec"), col("vec")), 4))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("qid"), col("rank"), col("vid"), col("sim"))
+  }
+
   /** Exact top-k neighbors for each query id (excluding self). */
   def bruteForceTopK(vectors: DataFrame, idCol: String, vecCol: String,
       queryIds: Seq[Long], k: Int = 5): DataFrame = {
@@ -42,14 +56,7 @@ object Similarity {
       col(vecCol).cast("array<double>").as("vec"))
     val q = v.filter(col("vid").isin(queryIds: _*))
       .select(col("vid").as("qid"), col("vec").as("qvec"))
-    val scored = v.crossJoin(broadcast(q))
-      .filter(col("vid") =!= col("qid"))
-      .withColumn("sim", round(cosine(col("qvec"), col("vec")), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("vid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vid"), col("sim"))
+    topK(v.crossJoin(broadcast(q)), k)
   }
 
   /** Deterministic pseudo-random hyperplane component for (plane, dim). */
@@ -225,15 +232,7 @@ object Similarity {
     // nProbe/nLists scan-fraction promise (caught by the plan audit).
     val q = probes.toDF("qid", "qvec", "probes")
       .select(col("qid"), col("qvec"), explode(col("probes")).as("list"))
-    val scored = assigned
-      .join(broadcast(q), Seq("list"))
-      .filter(col("vid") =!= col("qid"))
-      .withColumn("sim", round(cosine(col("qvec"), col("vec")), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("vid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vid"), col("sim"))
+    topK(assigned.join(broadcast(q), Seq("list")), k)
   }
 
   /** Approximate top-k: bucket by sign sketch, exact re-rank in-bucket. */
@@ -246,13 +245,6 @@ object Similarity {
     val q = v.filter(col("vid").isin(queryIds: _*))
       .select(col("vid").as("qid"), col("vec").as("qvec"),
         col("bucket").as("qbucket"))
-    val scored = v.join(broadcast(q), col("bucket") === col("qbucket"))
-      .filter(col("vid") =!= col("qid"))
-      .withColumn("sim", round(cosine(col("qvec"), col("vec")), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("vid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vid"), col("sim"))
+    topK(v.join(broadcast(q), col("bucket") === col("qbucket")), k)
   }
 }

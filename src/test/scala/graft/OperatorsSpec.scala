@@ -683,11 +683,23 @@ class DedupSpec extends AnyFunSuite {
     assert(la == ls, "star changed the component structure")
     assert((0 until 5).forall(k => la(9000L + k) == 0L),
       s"planted clique must collapse onto doc 0: $la")
-    // replication cap: chunks=64, h=3 would be C(64,61)=41664 tables
-    val e = intercept[IllegalArgumentException] {
-      Dedup.hammingPairs(hashes, maxHamming = 3, chunks = 64)
+    // replication cap: chunks=64, h=3 would be C(64,61)=41664 tables;
+    // h=32 would be C(64,32) ≈ 1.8e18, rejected without enumerating them
+    for (h <- Seq(3, 32)) {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.hammingPairs(hashes, maxHamming = h, chunks = 64)
+      }
+      assert(e.getMessage.contains("tables"), e.getMessage)
+      val c = intercept[IllegalArgumentException] {
+        Dedup.hammingCandidateCount(hashes, maxHamming = h, chunks = 64)
+      }
+      assert(c.getMessage.contains("tables"), c.getMessage)
     }
-    assert(e.getMessage.contains("tables"))
+    // no block layout for chunks = 0, no negative hamming radius
+    intercept[IllegalArgumentException](
+      Dedup.hammingCandidateCount(hashes, maxHamming = -1, chunks = 0))
+    intercept[IllegalArgumentException](
+      Dedup.hammingCandidateCount(hashes, maxHamming = -1, chunks = 4))
   }
 
 
@@ -738,6 +750,69 @@ class DedupSpec extends AnyFunSuite {
     leaves("simHash")(Dedup.simHash(texts, "doc_id", "text"))
     leaves("audioFingerprintMatch")(
       Dedup.audioFingerprintMatch(clips, "id", "bytes", "codec"))
+  }
+
+  /** `simHash64` as it was before it read `TextStats.shingleHashes`:
+    * FNV-1a re-run over each distinct shingle string. */
+  private def simHash64Strings(text: String, n: Int): Long = {
+    val acc = new Array[Int](64)
+    graft.lid.TextStats.shingles(text, n).foreach { s =>
+      var h = 0xcbf29ce484222325L
+      var i = 0
+      while (i < s.length) { h ^= s.charAt(i); h *= 0x100000001b3L; i += 1 }
+      for (b <- 0 until 64) if (((h >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1
+    }
+    (0 until 64).foldLeft(0L)((out, b) => if (acc(b) > 0) out | (1L << b) else out)
+  }
+
+  test("simHash64 over shingle hashes equals the string-shingle fold") {
+    val edge = Seq(null, "", "   ", " \t\n ", "ab", "\tleading tab",
+      "\nleading newline", "x😀y 𝐀 non-BMP chars")
+    val texts = (0L until 2500L)
+      .flatMap(i => Option(graft.model.ClipGen.clipAt(i, 7L)._1.transcript)) ++ edge
+    assert(texts.size >= 2000 + edge.size)
+    for (t <- texts; n <- Seq(3, 4, 5))
+      assert(Dedup.simHash64(t, n) == simHash64Strings(t, n),
+        s"n=$n text=${Option(t).map(_.take(40))}")
+  }
+
+  test("the df prune is a left-semi join that streams the cached index") {
+    // The captured plans are printed after `pruned` is filled, so its
+    // cached plan shows the join AQE actually ran. A tree line
+    // `+- [* ]<X>Join LeftSemi ...` has its children three columns to
+    // the right of its `+-`; the left child's subtree is every following
+    // line with a ':' in that column. The prune is the semi join whose
+    // left (stream) side scans a cached relation, the index.
+    val semiJoin = """[+:]- (?:\* )?\w+Join LeftSemi""".r
+    def prunes(run: => Any): Seq[String] = {
+      val prev = System.getProperty("graft.explain.capture")
+      System.setProperty("graft.explain.capture", "true")
+      try {
+        Dedup.drainCapturedPlans()
+        run
+        Dedup.drainCapturedPlans().flatMap { case (_, plan) =>
+          val lines = plan.split("\n")
+          lines.indices.flatMap { i =>
+            semiJoin.findFirstMatchIn(lines(i)).map(_.start + 3).filter { c =>
+              lines.drop(i + 1).takeWhile(l => l.length > c && l.charAt(c) == ':')
+                .exists(l => l.contains("InMemoryTableScan") ||
+                  l.contains("TableCacheQueryStage"))
+            }.map(_ => lines(i).trim)
+          }
+        }
+      } finally {
+        if (prev == null) System.clearProperty("graft.explain.capture")
+        else System.setProperty("graft.explain.capture", prev)
+      }
+    }
+    val clips = Seq(7L, 99L).map(s => graft.model.AudioGen.melodyClip(s)).zipWithIndex
+      .map { case (pcm, i) => (i.toLong, "pcm_s16le", graft.codec.Audio.pcm16Encode(pcm)) }
+      .toDF("id", "codec", "bytes")
+    for ((tier, joins) <- Seq(
+        "ngramJaccard" -> prunes(Dedup.ngramJaccard(docs, "doc_id", "text")),
+        "audioFingerprintMatch" -> prunes(
+          Dedup.audioFingerprintMatch(clips, "id", "bytes", "codec"))))
+      assert(joins.nonEmpty, s"$tier: no left-semi prune of the cached index")
   }
 }
 
