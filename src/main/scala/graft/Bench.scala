@@ -107,12 +107,12 @@ object Bench {
     spark.stop()
   }
 
-  /** The session of the timing mains ([[Bench]], [[BenchExtra]]):
-    * local[cpus], shuffle partitions = cpus, AQE on, UTC; the LID models
-    * load here, outside every timed window. */
+  /** The session of every main but `SurfaceDemo`: local[cpus] (or
+    * `SPARK_MASTER`), shuffle partitions = cpus, AQE on, UTC; the LID
+    * models load here, outside every timed window. */
   private[graft] def session(app: String, cpus: String): SparkSession = {
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
       .appName(app)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")

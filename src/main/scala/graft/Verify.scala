@@ -12,22 +12,16 @@ object Verify {
     // comma-separated query names to dump instead of the full surface
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session("graft-verify",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     dump(spark, sfDir, outDir, only)
     spark.stop()
   }
 
   /** Writes each catalog query over `sfDir` (all, or those named in
-    * `only`) to `outDir/<name>/` as one parquet file, and every oracle to
-    * `outDir/oracle_sql.json`. A query that fails is logged and its
-    * directory removed. */
+    * `only`) to `outDir/<name>/` as one parquet file, and the oracles of
+    * those queries to `outDir/oracle_sql.json`. A query that fails is
+    * logged and its directory removed. */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
       only: Option[Set[String]]): Unit = {
     new java.io.File(outDir).mkdirs()
@@ -35,7 +29,8 @@ object Verify {
       if (f.isDirectory) f.listFiles().foreach(deleteRec)
       f.delete()
     }
-    Catalog.all.filter(q => only.forall(_.contains(q.name))).foreach { q =>
+    val dumped = Catalog.all.filter(q => only.forall(_.contains(q.name)))
+    dumped.foreach { q =>
       try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/${q.name}")
       catch { case NonFatal(e) =>
@@ -58,7 +53,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = Catalog.all.flatMap(x => x.oracle.map(sql => s"${q(x.name)}: ${q(sql)}"))
+    val json = dumped.flatMap(x => x.oracle.map(sql => s"${q(x.name)}: ${q(sql)}"))
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }

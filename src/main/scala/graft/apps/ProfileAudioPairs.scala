@@ -1,6 +1,5 @@
 package graft.apps
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Alternating A/B (same protocol as [[ProfileNgramPairs]]) of the
@@ -13,11 +12,8 @@ import org.apache.spark.sql.functions._
 object ProfileAudioPairs {
   def main(args: Array[String]): Unit = {
     val rounds = if (args.nonEmpty) args(0).toInt else 4
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.session("graft-profile-audio-pairs",
+      Runtime.getRuntime.availableProcessors.toString)
     import spark.implicits._
     val corpus = graft.model.AudioGen.melodyCorpus(spark, 1000L)
     val lm = corpus.select($"id", $"codec", $"bytes")

@@ -1,6 +1,5 @@
 package graft.apps
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Alternating A/B of ngramJaccard-style pair generation inside ONE JVM
@@ -16,11 +15,8 @@ object ProfileNgramPairs {
   def main(args: Array[String]): Unit = {
     val rounds = if (args.nonEmpty) args(0).toInt else 4
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.session("graft-profile-ngram-pairs",
+      Runtime.getRuntime.availableProcessors.toString)
     import spark.implicits._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     docs.count() // scan warmup

@@ -1,7 +1,5 @@
 package graft.apps
 
-import org.apache.spark.sql.SparkSession
-
 /** The scaling-efficiency CONTROL: ideal, embarrassingly-parallel pure-CPU
   * work (`spark.range(n).map(pure splitmix chain)` + one sum) with no
   * engine logic, no shuffle, no IO. Running this at two parallelism
@@ -20,13 +18,7 @@ object ScalingControl {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val n = sys.env.getOrElse("SPARK_GRAFT_N", "800000000").toLong
     val work = sys.env.getOrElse("SPARK_GRAFT_WORK", "200").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaling-control")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.session("graft-scaling-control", cpus)
     import spark.implicits._
 
     def mix(seed: Long): Long = {

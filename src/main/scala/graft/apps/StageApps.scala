@@ -15,16 +15,7 @@ import graft.sources.JsonlIO
   */
 object AppSession {
   def make(name: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName(name)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.Bench.session(name, sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     graft.functions.AlphaRatio.register(s)
     s
   }

@@ -73,9 +73,8 @@ object DedupQueries extends Queries {
     s"""WITH ${Sql.splitmix("cm", "j", "(1000003 + j)::HUGEINT", "generate_series(0, 63) g(j)")},
         coefs AS (SELECT j, (z % 9223372036854775808) % 2305843009213693950 + 1 AS c FROM cm),
         docs AS (
-          SELECT doc_id, ${Sql.normText("text")} AS t FROM documents
-          WHERE length(trim(coalesce(text, ''))) > 0),
-        sh AS (${Sql.shingles("docs", 5)}),
+          SELECT doc_id, ${Sql.normText("text")} AS t FROM documents),
+        sh AS (${Sql.shingles("docs", 5, cond = "length(t) > 0")}),
         hx AS (SELECT doc_id, ${Sql.fnv1a64("s")} AS h FROM sh),
         $sigCtes,
         bk AS (
@@ -122,9 +121,8 @@ object DedupQueries extends Queries {
     * `sig(doc_id, sh64)`. */
   private val simhashSig: String =
     s"""docs AS (
-          SELECT doc_id, ${Sql.normText("text")} AS t FROM documents
-          WHERE length(trim(text)) > 0),
-        sh AS (${Sql.shingles("docs", 4)}),
+          SELECT doc_id, ${Sql.normText("text")} AS t FROM documents),
+        sh AS (${Sql.shingles("docs", 4, cond = "length(t) > 0")}),
         h AS (SELECT doc_id, ${Sql.fnv1a64("s")} AS h FROM sh),
         bits AS (
           SELECT doc_id, b,

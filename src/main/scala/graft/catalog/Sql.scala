@@ -8,10 +8,13 @@ import graft.lid.TextStats
   * name it instead of repeating it. */
 private[catalog] object Sql {
 
-  /** The text normalization of the `Dedup` tiers: trimmed, whitespace
-    * runs collapsed to one space, lower-cased. */
+  /** `TextStats.normText`, the text normalization of the `Dedup` tiers:
+    * lower-cased, each run of the six ASCII whitespace chars one space,
+    * then one edge space dropped at each end (DuckDB's `trim` strips only
+    * spaces). The class is spelled out because RE2's `\s` leaves out
+    * `\x0B`, which Java's includes. */
   def normText(c: String): String =
-    s"lower(regexp_replace(trim($c), '\\s+', ' ', 'g'))"
+    s"trim(regexp_replace(lower($c), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))"
 
   /** `e · k mod 2^64` for `e`, `k` in [0, 2^64) — a JVM Long's wrapping
     * multiply. The product is split at 32 bits so that every partial
@@ -34,8 +37,9 @@ private[catalog] object Sql {
   def splitmix(dst: String, keys: String, seed: String, from: String): String =
     splitmixFin(dst, keys, s"($seed + 11400714819323198485) % 18446744073709551616", from)
 
-  /** FNV-1a 64 over the characters (code points) of the string column
-    * `s`, as `TextStats.shingleHashes` hashes a shingle; in [0, 2^64). */
+  /** FNV-1a 64 over the code points of the string column `s`, as
+    * `TextStats.fnv64` and `TextStats.shingleHashes` hash a shingle; in
+    * [0, 2^64). */
   def fnv1a64(s: String): String =
     s"""list_reduce(
           list_prepend(14695981039346656037::HUGEINT,
@@ -43,13 +47,13 @@ private[catalog] object Sql {
               i -> unicode(substr($s, i, 1))::HUGEINT)),
           (acc, x) -> ${mulMod64("xor(acc, x)", "1099511628211")})"""
 
-  /** `FROM` clause over every n-char window start `i` of the text `t` in
+  /** `FROM` clause over every n-code-point window start `i` of the text `t` in
     * `src` rows satisfying `cond` (at most 2000; a text shorter than n has
     * one window, the whole text). */
   def windows(src: String, n: Int, cond: String = "TRUE"): String =
     s"$src, generate_series(1, 2000) g(i) WHERE $cond AND i <= greatest(length(t) - ${n - 1}, 1)"
 
-  /** Distinct n-char shingles `s` of `t`, per `keep` columns (`""` for
+  /** Distinct n-code-point shingles `s` of `t`, per `keep` columns (`""` for
     * the set over all rows), as `TextStats.shingles` cuts them. */
   def shingles(src: String, n: Int, keep: String = "doc_id, ",
       cond: String = "TRUE"): String =

@@ -90,8 +90,7 @@ object TextQueries extends Queries {
     }),
     query("text_fingerprint", (s, d) => t(s, d, "documents")
       .select(col("doc_id"),
-        substring(md5(lower(regexp_replace(trim(col("text")), "\\s+", " "))),
-          1, 16).as("fp")),
+        substring(md5(Dedup.normText(col("text"))), 1, 16).as("fp")),
       s"SELECT doc_id, substr(md5(${Sql.normText("text")}), 1, 16) AS fp FROM documents"),
     query("text_gopher", (s, d) => {
       val g = new Gopher

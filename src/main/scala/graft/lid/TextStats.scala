@@ -271,11 +271,36 @@ object TextStats {
     } finally d.end()
   }
 
+  /** The text normalization of every dedup tier: lower-cased
+    * (`String.toLowerCase`), each run of `[ \t\n\x0B\f\r]` replaced by
+    * one space, then one leading and one trailing space dropped. Null
+    * stays null. `Dedup.normText` is the same as a Spark column and
+    * `catalog.Sql.normText` as DuckDB SQL; the three are pinned equal by
+    * a test. */
+  def normText(text: String): String = {
+    if (text == null) return null
+    val lower = text.toLowerCase
+    val sb = new java.lang.StringBuilder(lower.length)
+    var gap = false
+    var i = 0
+    while (i < lower.length) {
+      val c = lower.charAt(i)
+      if (c == ' ' || (c >= '\t' && c <= '\r')) gap = true
+      else {
+        if (gap && sb.length > 0) sb.append(' ')
+        gap = false
+        sb.append(c)
+      }
+      i += 1
+    }
+    sb.toString
+  }
+
   /** 64-bit polynomial rolling-hash document fingerprint over the
-    * whitespace-normalized lowercase text (graft text-analysis surface). */
+    * [[normText]]-normalized text (graft text-analysis surface). */
   def fingerprint(text: String): Long = {
     if (text == null) return 0L
-    val norm = WsRun.matcher(text.trim.toLowerCase).replaceAll(" ")
+    val norm = normText(text)
     var h = 1125899906842597L // prime
     var i = 0
     while (i < norm.length) { h = 31 * h + norm.charAt(i); i += 1 }
@@ -310,40 +335,52 @@ object TextStats {
     (best, bestC)
   }
 
-  /** Character shingles (n-grams) of the whitespace-normalized text,
-    * distinct — the unit for Jaccard / MinHash dedup. */
+  /** Code-point shingles (n-grams) of the [[normText]]-normalized text,
+    * distinct — the unit for Jaccard / MinHash dedup. A text shorter
+    * than n is one shingle, the whole text. */
   def shingles(text: String, n: Int): Set[String] = {
-    if (text == null) return Set.empty
-    val norm = WsRun.matcher(text.trim.toLowerCase).replaceAll(" ")
-    if (norm.length < n) return if (norm.isEmpty) Set.empty else Set(norm)
+    val cps = normCodePoints(text)
+    if (cps.length <= n)
+      return if (cps.isEmpty) Set.empty else Set(new String(cps, 0, cps.length))
     val out = scala.collection.mutable.HashSet.empty[String]
     var i = 0
-    while (i + n <= norm.length) { out += norm.substring(i, i + n); i += 1 }
+    while (i + n <= cps.length) { out += new String(cps, i, n); i += 1 }
     out.toSet
   }
 
-  /** FNV-1a 64 over the chars of `s` — the exact hash every dedup tier
-    * (MinHash base hash, shingle join keys) uses; kept here so the
+  /** The code points of [[normText]] of `text`; empty for null. Spark's
+    * `length`/`substr` and DuckDB's count the same units. */
+  private def normCodePoints(text: String): Array[Int] = {
+    if (text == null) return Array.emptyIntArray
+    val s = normText(text)
+    val cps = new Array[Int](s.length)
+    var k = 0
+    var i = 0
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      cps(k) = cp; k += 1
+      i += Character.charCount(cp)
+    }
+    if (k == cps.length) cps else java.util.Arrays.copyOf(cps, k)
+  }
+
+  private final val FnvBasis = 0xcbf29ce484222325L
+  private final val FnvPrime = 0x100000001b3L
+
+  /** FNV-1a 64 over the code points of `s` — the exact hash every dedup
+    * tier (MinHash base hash, shingle join keys) uses; kept here so the
     * string and windowed forms can never drift apart. */
   def fnv64(s: String): Long = {
-    var h = 0xcbf29ce484222325L
+    var h = FnvBasis
     var i = 0
-    while (i < s.length) { h ^= s.charAt(i); h *= 0x100000001b3L; i += 1 }
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      h ^= cp; h *= FnvPrime
+      i += Character.charCount(cp)
+    }
     h
   }
 
-  /** Distinct FNV-1a 64 hashes of the char n-shingles of the normalized
-    * text — value-wise EXACTLY `shingles(text, n).map(fnv64)` as a set
-    * (up to in-document 64-bit collisions, which collapse two distinct
-    * shingles onto one hash; ~1e-15 per doc), computed without
-    * materializing any substring: each window hashes chars in place and
-    * dedups through an open-addressed long table. This is the hot-path
-    * form: the MinHash signature depends only on each shingle's fnv64
-    * (min over per-hash permutations — duplicates and collisions both
-    * leave every min unchanged, so for signatures the equivalence is
-    * exact, not probabilistic), and the Jaccard inverted index joins on
-    * the hash anyway at scale. Output order is insertion order; all
-    * consumers are order-independent (set semantics). */
   /** Slots of `shingleHashes`' open-addressed set for m windows: the
     * next power of two >= 2m, at least 16. Sized in Long, so it throws
     * instead of overflowing Int (a 16-slot table that never finds an
@@ -360,12 +397,24 @@ object TextStats {
   // largest power of two a JVM array can hold
   private val MaxArrayPow2 = 1L << 30
 
+  /** Distinct FNV-1a 64 hashes of the code-point n-shingles of the
+    * normalized text — value-wise EXACTLY `shingles(text, n).map(fnv64)`
+    * as a set (up to in-document 64-bit collisions, which collapse two
+    * distinct shingles onto one hash; ~1e-15 per doc), computed without
+    * materializing any substring: each window hashes code points in
+    * place and dedups through an open-addressed long table. This is the
+    * hot-path form: the MinHash signature depends only on each shingle's
+    * fnv64 (min over per-hash permutations — duplicates and collisions
+    * both leave every min unchanged, so for signatures the equivalence
+    * is exact, not probabilistic), and the Jaccard inverted index joins
+    * on the hash anyway at scale. Output order is insertion order; all
+    * consumers are order-independent (set semantics). */
   def shingleHashes(text: String, n: Int): Array[Long] = {
-    if (text == null) return Array.emptyLongArray
-    val norm = WsRun.matcher(text.trim.toLowerCase).replaceAll(" ")
-    if (norm.isEmpty) return Array.emptyLongArray
-    if (norm.length < n) return Array(fnv64(norm))
-    val m = norm.length - n + 1
+    val cps = normCodePoints(text)
+    if (cps.isEmpty) return Array.emptyLongArray
+    // a text shorter than n is one window, the whole text
+    val w = math.min(n, cps.length)
+    val m = cps.length - w + 1
     // open-addressed set, load <= 0.5; 0L is the empty sentinel — a real
     // zero hash (vanishingly rare but legal) is tracked by the flag
     // instead of a slot
@@ -377,10 +426,10 @@ object TextStats {
     var zeroSeen = false
     var i = 0
     while (i < m) {
-      var h = 0xcbf29ce484222325L
+      var h = FnvBasis
       var j = i
-      val end = i + n
-      while (j < end) { h ^= norm.charAt(j); h *= 0x100000001b3L; j += 1 }
+      val end = i + w
+      while (j < end) { h ^= cps(j); h *= FnvPrime; j += 1 }
       if (h == 0L) {
         if (!zeroSeen) { zeroSeen = true; out(nOut) = 0L; nOut += 1 }
       } else {

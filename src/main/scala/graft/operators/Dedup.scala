@@ -32,8 +32,11 @@ import org.apache.spark.storage.StorageLevel
   */
 object Dedup {
 
-  private def normText(c: Column): Column =
-    lower(regexp_replace(trim(c), "\\s+", " "))
+  /** [[graft.lid.TextStats.normText]] as a Spark column: lower-cased,
+    * each run of `[ \t\n\x0B\f\r]` one space, one edge space dropped
+    * at each end (`trim` strips only spaces). */
+  private[graft] def normText(c: Column): Column =
+    trim(regexp_replace(lower(c), "[ \\t\\n\\x0B\\f\\r]+", " "))
 
   /** Plan-observability hook (guide §1/§7.2): the eager tiers
     * (localCheckpoint inside the operator) return a computed RDD scan,
@@ -150,16 +153,6 @@ object Dedup {
         count(lit(1)).as("n_docs"))
   }
 
-  /** Char-shingle set of an ALREADY-NORMALIZED column, distinct. The
-    * caller must project [[normText]] into its own column first —
-    * referencing a normalization EXPRESSION here would embed it in the
-    * per-element lambda and re-run the regex once per shingle (measured
-    * O(len²) per row). */
-  def shingleCol(normCol: Column, n: Int): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(normCol) - (n - 1), lit(1))),
-      i => normCol.substr(i, lit(n))))
-
   /** The df-pruned posting index of [[ngramJaccard]] and
     * [[audioFingerprintMatch]], cached and filled (both self-join sides
     * read it), passed to `body`: the rows of `index` (id, `key`) whose
@@ -211,14 +204,13 @@ object Dedup {
       maxShingleDfFrac: Double = 0.0): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // Typed flatMap, NOT explode(shingleCol(normText-projection)):
-    // CollapseProject inlines the normalization regex into the
-    // per-element substr lambda and the generator-pruning filter
-    // (O(len) regex runs per CHARACTER of every row — the same
-    // pathology measured 16 s → 1.4 s in decontaminate). Blank/null
-    // texts carry no shingles to compare (TextStats.shingles returns
-    // the empty set, so the degenerate "" shingle can't pair every
-    // empty doc with every other).
+    // Typed flatMap, NOT an explode of a SQL shingle array over a
+    // normText projection: CollapseProject inlines the normalization
+    // regex into the per-element substr lambda and the generator-pruning
+    // filter (O(len) regex runs per CHARACTER of every row — measured
+    // 16 s → 1.4 s in decontaminate). Blank/null texts carry no
+    // shingles to compare (TextStats.shingleHashes returns none, so a
+    // degenerate "" shingle can't pair every empty doc with every other).
     // HASHED inverted index (guide §2.3 "shuffle keys and metadata
     // instead of payloads"): the index carries fnv64(shingle) — 8 fixed
     // bytes — instead of the n-char string; the df census, prune join
@@ -293,13 +285,13 @@ object Dedup {
     // collisions (~1e-10 per benchmark shingle set of 10^5; DedupSpec
     // asserts equality on real corpora). The unhashed form is the
     // DuckDB-oracle-comparable mode.
-    // Shingles come from a typed flatMap (TextStats.shingles — same
-    // norm + truncated-short-text + distinct semantics as the SQL
-    // shingleCol/normText pair, which the DuckDB oracle mirrors), NOT
-    // from shingleCol over a projected norm column: CollapseProject
-    // inlines the normalization regex into the per-element substr
-    // lambda AND the generator-pruning filter, re-running it hundreds
-    // of times per row (measured 16 s for 5 000 docs vs ~1 s typed).
+    // Shingles come from a typed flatMap (TextStats.shingles — the
+    // code-point windows of TextStats.normText that the DuckDB oracle's
+    // Sql.shingles over Sql.normText cuts), NOT from a SQL shingle array
+    // over a projected norm column: CollapseProject inlines the
+    // normalization regex into the per-element substr lambda AND the
+    // generator-pruning filter, re-running it hundreds of times per row
+    // (measured 16 s for 5 000 docs vs ~1 s typed).
     // The distinct-shingle total rides along with each exploded row so
     // no second pass or extra shuffle recovers it later.
     val d0 = fanOut(docs.select(longId(docs, idCol).as("id"),
@@ -777,20 +769,14 @@ object Dedup {
     * (≈ 2/(guarantee+1) of positions, locally deduped per doc) reach
     * the groupBy exchange, ~window bytes each.
     *
-    * `hashMode`:
-    *  - "md5" (default, the oracle-comparable mode) — md5 over UTF-8
-    *    bytes so an external SQL engine reproduces the selection
-    *    bit-for-bit (unsigned-byte order on digests ≡ lexicographic
-    *    order on their hex form). The window bytes are digested as a
-    *    slice of ONE per-doc UTF-8 encoding (per-char byte offsets
-    *    precomputed), not a fresh substring+getBytes per position —
-    *    same digests, one allocation per doc instead of two per char.
-    *  - "roll" — Karp–Rabin polynomial rolling hash, O(n) hash work
-    *    per doc instead of O(n·window) digest bytes: the scale mode
-    *    when bit-for-bit SQL reproducibility isn't needed. Selection
-    *    differs from md5 mode (different hash ⇒ different minima) but
-    *    the winnowing guarantee is identical, because equal content
-    *    gives equal hashes in any mode.
+    * Windows are `window` code points of the [[normText]]-normalized
+    * text, hashed with md5 over their UTF-8 bytes so an external SQL
+    * engine reproduces the selection bit-for-bit (unsigned-byte order on
+    * digests ≡ lexicographic order on their hex form). The window bytes
+    * are digested as a slice of ONE per-doc UTF-8 encoding (the byte
+    * offset of each code point precomputed), not a fresh
+    * substring+getBytes per position — same digests, one allocation per
+    * doc instead of two per char.
     *
     * Precondition: `idCol` is unique — one row per document, as every
     * pair tier assumes of its id. `n_docs` counts rows, so a document
@@ -798,86 +784,42 @@ object Dedup {
     * `minDocs`; derive a unique id first if the input has repeats. */
   def repeatedSpans(df: DataFrame, idCol: String, textCol: String,
       window: Int = 40, guarantee: Int = 8,
-      minDocs: Int = 2, hashMode: String = "md5"): DataFrame = {
-    require(hashMode == "md5" || hashMode == "roll",
-      s"hashMode must be 'md5' or 'roll', got '$hashMode'")
+      minDocs: Int = 2): DataFrame = {
     require(guarantee >= 1, s"guarantee must be >= 1, got $guarantee")
     val spark = df.sparkSession
     import spark.implicits._
-    val useRoll = hashMode == "roll"
     val selected = fanOut(df.select(longId(df, idCol).as("id"),
       normText(col(textCol)).as("t")))
       .as[(Long, String)]
       .mapPartitions { it =>
-        val md =
-          if (useRoll) null else java.security.MessageDigest.getInstance("MD5")
+        val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, t) =>
-          if (t == null || t.length < window) Iterator.empty
+          val nCp = if (t == null) 0 else t.codePointCount(0, t.length)
+          if (nCp < window) Iterator.empty
           else {
-            val n = t.length - window + 1
-            var hsMd: Array[Array[Byte]] = null
-            var hsRl: Array[Long] = null
-            if (useRoll) {
-              // Karp–Rabin: h(i) = Σ c(i+j)·B^(w-1-j) mod 2^64
-              val B = 0x100000001b3L
-              var bw = 1L
-              var k = 0
-              while (k < window - 1) { bw *= B; k += 1 }
-              hsRl = new Array[Long](n)
-              var h = 0L
-              k = 0
-              while (k < window) { h = h * B + t.charAt(k); k += 1 }
-              hsRl(0) = h
-              var i = 1
-              while (i < n) {
-                h = (h - t.charAt(i - 1) * bw) * B + t.charAt(i + window - 1)
-                hsRl(i) = h
-                i += 1
-              }
-            } else {
-              hsMd = new Array[Array[Byte]](n)
-              // fast path: digest slices of ONE UTF-8 encoding of the doc
-              // (char→byte offsets are exact for surrogate-free text; a
-              // split surrogate pair would encode differently than
-              // substring().getBytes, so those rare docs fall back)
-              var hasSurrogate = false
-              var ci = 0
-              while (ci < t.length && !hasSurrogate) {
-                if (Character.isSurrogate(t.charAt(ci))) hasSurrogate = true
-                ci += 1
-              }
-              if (!hasSurrogate) {
-                val bytes =
-                  t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-                val off = new Array[Int](t.length + 1)
-                var b = 0
-                ci = 0
-                while (ci < t.length) {
-                  off(ci) = b
-                  val c = t.charAt(ci)
-                  b += (if (c < 0x80) 1 else if (c < 0x800) 2 else 3)
-                  ci += 1
-                }
-                off(t.length) = b
-                var i = 0
-                while (i < n) {
-                  md.update(bytes, off(i), off(i + window) - off(i))
-                  hsMd(i) = md.digest()
-                  i += 1
-                }
-              } else {
-                var i = 0
-                while (i < n) {
-                  hsMd(i) = md.digest(t.substring(i, i + window)
-                    .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-                  i += 1
-                }
-              }
+            val bytes = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+            // char and UTF-8 byte offset of each code point
+            val cOff = new Array[Int](nCp + 1)
+            val bOff = new Array[Int](nCp + 1)
+            var k = 0
+            while (k < nCp) {
+              val cp = t.codePointAt(cOff(k))
+              cOff(k + 1) = cOff(k) + Character.charCount(cp)
+              bOff(k + 1) = bOff(k) +
+                (if (cp < 0x80) 1 else if (cp < 0x800) 2 else if (cp < 0x10000) 3 else 4)
+              k += 1
             }
-            // hs(i) <= hs(j)? (unsigned in both modes)
+            val n = nCp - window + 1
+            val hs = new Array[Array[Byte]](n)
+            var i = 0
+            while (i < n) {
+              md.update(bytes, bOff(i), bOff(i + window) - bOff(i))
+              hs(i) = md.digest()
+              i += 1
+            }
+            // hs(i) <= hs(j)? (unsigned)
             @inline def le(i: Int, j: Int): Boolean =
-              if (useRoll) java.lang.Long.compareUnsigned(hsRl(i), hsRl(j)) <= 0
-              else java.util.Arrays.compareUnsigned(hsMd(i), hsMd(j)) <= 0
+              java.util.Arrays.compareUnsigned(hs(i), hs(j)) <= 0
             // true winnowing: rightmost-min of every g-window, via a
             // monotonic deque (pop-equal-from-back ⇒ front is the
             // RIGHTMOST occurrence of the window minimum); O(n) total
@@ -888,7 +830,7 @@ object Dedup {
             var size = 0
             val uniq = scala.collection.mutable.LinkedHashSet.empty[String]
             var lastSel = -1
-            var i = 0
+            i = 0
             while (i < n) {
               if (size > 0 && dq(head) <= i - g) { // slide out of window
                 head = (head + 1) % cap
@@ -901,7 +843,7 @@ object Dedup {
               if (i >= g - 1) {
                 val sel = dq(head)
                 if (sel != lastSel) {
-                  uniq += t.substring(sel, sel + window)
+                  uniq += t.substring(cOff(sel), cOff(sel + window))
                   lastSel = sel
                 }
               }
@@ -930,14 +872,17 @@ object Dedup {
     * (generous `candidateThreshold` on the estimate), the decision is
     * the exact Jaccard of the two shingle sets, joined back per
     * candidate pair. Output therefore contains no estimator noise —
-    * every (a, b, jaccard) is exact over the [[normText]]-normalized
-    * `n`-gram space — and is value-comparable against an exact all-pairs
-    * oracle whenever banding recall holds at `threshold` (with 16 bands
-    * × 4 rows a J = 0.8 pair collides with p ≈ 1 - (1-0.8⁴)¹⁶ ≈ 0.9998;
-    * the driver's sf0.01 corpus plants only J ≥ 0.92 pairs, where the
-    * miss probability is < 1e-7 — and the hash is deterministic, so the
-    * oracle comparison pins it). At scale the exact verify touches only
-    * candidate pairs (O(n·bands) bucket-mates), never all pairs. */
+    * every (a, b, jaccard) is exact over the distinct code-point
+    * `n`-shingles of the [[normText]]-normalized text, intersected as
+    * their [[graft.lid.TextStats.shingleHashes]] (so up to in-document
+    * 64-bit FNV collisions, as in [[ngramJaccard]]) — and is
+    * value-comparable against an exact all-pairs oracle whenever banding
+    * recall holds at `threshold` (with 16 bands × 4 rows a J = 0.8 pair
+    * collides with p ≈ 1 - (1-0.8⁴)¹⁶ ≈ 0.9998; the driver's sf0.01
+    * corpus plants only J ≥ 0.92 pairs, where the miss probability is
+    * < 1e-7 — and the hash is deterministic, so the oracle comparison
+    * pins it). At scale the exact verify touches only candidate pairs
+    * (O(n·bands) bucket-mates), never all pairs. */
   def minHashLshVerified(df: DataFrame, idCol: String, textCol: String,
       n: Int = 5, numHashes: Int = 64, bands: Int = 16,
       candidateThreshold: Double = 0.5,
@@ -949,17 +894,16 @@ object Dedup {
     // the composed tier unchanged
     val cands = minHashLsh(df, idCol, textCol, n, numHashes, bands,
       candidateThreshold, pairMode = pairMode).select($"a", $"b")
-    // shingle ONLY the candidate ids (semi-join first — candidates are
-    // few by construction, the corpus is not), cached so the two join
-    // sides share one shingling pass instead of re-running
-    // normText+shingleCol over the corpus once per side
+    // hash the shingles of ONLY the candidate ids (semi-join first —
+    // candidates are few by construction, the corpus is not), cached so
+    // the two join sides share one pass
     val candIds = cands.select($"a".as("id"))
       .union(cands.select($"b".as("id"))).distinct()
-    val shingled = df.select(longId(df, idCol).as("id"),
-      normText(col(textCol)).as("t"))
-      .join(candIds, Seq("id"), "left_semi")
-      .select(col("id"), shingleCol(col("t"), n).as("sh"))
-    cached(shingled, fill = false) { sh =>
+    val hashed = df.select(longId(df, idCol).as("id"), col(textCol).as("text"))
+      .join(candIds, Seq("id"), "left_semi").as[(Long, String)]
+      .map { case (id, text) => (id, graft.lid.TextStats.shingleHashes(text, n)) }
+      .toDF("id", "sh")
+    cached(hashed, fill = false) { sh =>
       cands
         .join(sh.select($"id".as("a"), $"sh".as("sha")), "a")
         .join(sh.select($"id".as("b"), $"sh".as("shb")), "b")

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.model.{ClipRow, DecisionRow, SourceStats}
-import graft.operators.{Stage1, Stage2}
+import graft.lid.TextStats
+import graft.operators.{Dedup, Stage1, Stage2}
 import graft.sources.JsonlIO
 
 /** Input/state/output rows for the stateful sessionizer. Event time is
@@ -136,12 +137,8 @@ object StreamingFilter {
     clips
       // null OR blank transcripts are NOT duplicates of each other: they
       // key by their own id so none is swallowed (the quality gates
-      // judge them later) — same contract as Dedup.exact, which guards
-      // on the NORMALIZED length, not just null
-      .groupByKey(c =>
-        if (c.transcript == null || c.transcript.trim.isEmpty)
-          "id:" + c.clip_id
-        else digest(c.transcript))
+      // judge them later) — same contract as Dedup.exact
+      .groupByKey(c => Option(digest(c.transcript)).getOrElse("id:" + c.clip_id))
       .flatMapGroupsWithState[Boolean, ClipRow](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: String, rows: Iterator[ClipRow], seen: GroupState[Boolean]) =>
@@ -171,7 +168,7 @@ object StreamingFilter {
     * of our own, the engine owns eviction. */
   def streamingDedupBounded(df: DataFrame, idCol: String, textCol: String,
       tsCol: String, horizon: String): DataFrame = {
-    val norm = regexp_replace(lower(trim(col(textCol))), "\\s+", " ")
+    val norm = Dedup.normText(col(textCol))
     // blank text md5s to a non-null digest — the length guard (not a
     // bare coalesce) keeps blank rows keyed by their own id, matching
     // Dedup.exact and streamingDedup
@@ -183,10 +180,12 @@ object StreamingFilter {
       .drop("digest")
   }
 
-  /** Normalized-transcript digest (the [[graft.operators.Dedup.exact]]
-    * key). */
+  /** [[graft.operators.Dedup.exact]]'s key of a transcript: the md5 hex
+    * of its [[graft.lid.TextStats.normText]] normalization, or null when
+    * that is null or empty (the texts `Dedup.exact` keys by their id). */
   def digest(transcript: String): String = {
-    val norm = transcript.trim.toLowerCase.replaceAll("\\s+", " ")
+    val norm = TextStats.normText(transcript)
+    if (norm == null || norm.isEmpty) return null
     val md = java.security.MessageDigest.getInstance("MD5")
     md.digest(norm.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }

@@ -178,6 +178,8 @@ class DedupSpec extends AnyFunSuite {
       "café über straße œuvre", // accents / ligature
       "", // empty -> empty
       null, // null -> empty
+      "\tx\u000B\u000By\f", // edge and vertical-tab whitespace
+      "x😀y", "😀😀😀😀😀😀", // non-BMP: one code point, two chars
       "aaaaaaaaaaaaaaaa", // maximal duplicate windows
       "x" * 3000) // long doc, many windows
     for (t <- cases; n <- Seq(3, 5, 8)) {
@@ -248,7 +250,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("repeatedSpans: winnow guarantee holds at the MINIMAL region " +
-      "length, every seed, both hash modes") {
+      "length, every seed") {
     // the guarantee — any shared region of >= window+guarantee-1 chars
     // yields a shared selected span — must hold for EVERY content, not
     // just friendly hash draws. The pre-r4 forward-min rule ([i, i+g)
@@ -268,23 +270,20 @@ class DedupSpec extends AnyFunSuite {
       val a = s"${randText(30 + seed)} $region ${randText(25)}"
       val b = s"${randText(55 - seed)} $region ${randText(40)}"
       val d = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
-      Seq("md5", "roll").foreach { mode =>
-        val out = Dedup.repeatedSpans(d, "doc_id", "text",
-          window = w, guarantee = g, minDocs = 2, hashMode = mode)
-          .collect()
-        assert(out.nonEmpty, s"seed=$seed mode=$mode: guarantee violated")
-        // shared spans must come from the planted region (flanks differ)
-        out.foreach(r => assert((" " + region + " ").contains(r.getString(0)),
-          s"seed=$seed mode=$mode span '${r.getString(0)}' outside region"))
-      }
+      val out = Dedup.repeatedSpans(d, "doc_id", "text",
+        window = w, guarantee = g, minDocs = 2).collect()
+      assert(out.nonEmpty, s"seed=$seed: guarantee violated")
+      // shared spans must come from the planted region (flanks differ)
+      out.foreach(r => assert((" " + region + " ").contains(r.getString(0)),
+        s"seed=$seed span '${r.getString(0)}' outside region"))
     }
   }
 
   test("repeatedSpans: md5 fast byte-slice path ≡ substring path " +
       "(non-ASCII + surrogate fallback)") {
-    // é/ü exercise the 2-byte offsets of the single-encoding fast path;
-    // the emoji (surrogate pair) forces the fallback branch — both must
-    // select identical spans for identical content
+    // é/ü exercise the 2-byte offsets of the single encoding, the emoji
+    // (one code point, two chars, four bytes) the 4-byte ones — identical
+    // content must select identical spans
     val shared = "gemeinsame Passage über die Bücherei und Kaffee"
     val d = Seq(
       (1L, s"Ein müder Anfang hier 😀 $shared und Schluss"),
@@ -753,13 +752,12 @@ class DedupSpec extends AnyFunSuite {
   }
 
   /** `simHash64` as it was before it read `TextStats.shingleHashes`:
-    * FNV-1a re-run over each distinct shingle string. */
+    * FNV-1a re-run over the code points of each distinct shingle string. */
   private def simHash64Strings(text: String, n: Int): Long = {
     val acc = new Array[Int](64)
     graft.lid.TextStats.shingles(text, n).foreach { s =>
       var h = 0xcbf29ce484222325L
-      var i = 0
-      while (i < s.length) { h ^= s.charAt(i); h *= 0x100000001b3L; i += 1 }
+      s.codePoints.forEach { cp => h ^= cp; h *= 0x100000001b3L }
       for (b <- 0 until 64) if (((h >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1
     }
     (0 until 64).foldLeft(0L)((out, b) => if (acc(b) > 0) out | (1L << b) else out)

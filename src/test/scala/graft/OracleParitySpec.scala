@@ -11,6 +11,21 @@ class OracleParitySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
+  private def rm(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(rm)
+    f.delete()
+  }
+
+  test("a subset dump writes exactly the oracles of the dumped queries") {
+    val out = java.nio.file.Files.createTempDirectory("oracle-subset").toFile
+    try {
+      val only = Set("q1_agg", "dedup_exact")
+      Verify.dump(spark, sf, out.getPath, Some(only))
+      assert(out.listFiles().filter(_.isDirectory).map(_.getName).toSet == only)
+      assert(spark.read.json(s"$out/oracle_sql.json").columns.toSet == only)
+    } finally rm(out)
+  }
+
   test("all 70 oracle queries match DuckDB at sf0.001") {
     val out = java.nio.file.Files.createTempDirectory("oracle-parity").toFile
     try {
@@ -21,12 +36,6 @@ class OracleParitySpec extends AnyFunSuite {
         l => log.append(l).append('\n')))
       assert(rc == 0, s"compare_oracle.py exited $rc:\n$log")
       assert(log.toString.contains("70 ok, 0 fail"), log.toString)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(out)
-    }
+    } finally rm(out)
   }
 }

@@ -294,6 +294,49 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == Seq("1", "3", "4", "5", "7"), streamed.toString)
   }
 
+  test("streaming, bounded-streaming and batch exact dedup keep the same ids " +
+      "over edge tabs, newlines and vertical-tab runs") {
+    import graft.model.ClipRow
+    import graft.operators.Dedup
+    val texts = Seq(
+      1 -> "ein satz über die stadt",
+      2 -> "\tein satz über die stadt\n", // edge tab and newline
+      3 -> "ein\u000B\u000Bsatz über die stadt", // interior \x0B run
+      4 -> "\n\u000BEIN satz  über\tdie stadt\u000B",
+      5 -> "ein anderer satz",
+      6 -> "\t\n", // blank: keyed by its own id
+      7 -> "\u000B",
+      8 -> null)
+    val pcm = graft.codec.Audio.encode("pcm_s16le",
+      graft.codec.Audio.synth(11L, 8000, 800))
+    val clips = texts.map { case (id, t) =>
+      ClipRow(f"srcd-1900-01-01-a-i$id%04d", pcm, 8000, 100, "pcm_s16le", t, null)
+    }
+    val expect = Seq(1L, 5L, 6L, 7L, 8L)
+    val streamed = StreamingFilter.streamingDedup(clips.toDS()).collect()
+      .map(_.clip_id.takeRight(4).toLong).sorted.toSeq
+    assert(streamed == expect)
+    val docs = texts.map { case (id, t) => (id.toLong, t) }.toDF("id", "text")
+    val batch = Dedup.exact(docs, "id", "text").collect()
+      .map(_.getLong(1)).sorted.toSeq
+    assert(batch == expect)
+    // the bounded dedup runs on streams only: one micro-batch of one
+    // id-ordered file, so each digest's first row is its minimal id
+    val tmp = java.nio.file.Files.createTempDirectory("ndedup").toString
+    docs.withColumn("ts", to_timestamp(lit("2026-01-01 10:00:00")))
+      .coalesce(1).write.parquet(s"$tmp/in")
+    StreamingFilter.streamingDedupBounded(
+      spark.readStream.schema("id BIGINT, text STRING, ts TIMESTAMP")
+        .parquet(s"$tmp/in"), "id", "text", "ts", "10 minutes")
+      .writeStream.format("parquet")
+      .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ck")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    val bounded = spark.read.parquet(s"$tmp/out").select("id").as[Long]
+      .collect().sorted.toSeq
+    assert(bounded == expect)
+  }
+
   test("simhash64 expression: parity with the Scala hash, codegen, foldable") {
     import graft.functions.SimHashOps
     import graft.operators.Dedup
