@@ -55,12 +55,12 @@ object SparkEntry {
     })
   }
 
-  // Session-keyed broadcast cache: the model-backed queries (ppl
-  // buckets, BPE) used to create a FRESH Broadcast of their model on
-  // every invocation and never destroy it — a long session accumulated
-  // undestroyed broadcast blocks. One broadcast per (session, key); the
-  // whole detector bundle is Stage1.modelsBc, one per SparkContext. Same
-  // weak-key + isStopped-eviction discipline as pipeCache.
+  // Session-keyed broadcast cache: a model-backed query (BPE) used to
+  // create a FRESH Broadcast of its model on every invocation and never
+  // destroy it — a long session accumulated undestroyed broadcast
+  // blocks. One broadcast per (session, key); the detector bundle and
+  // its char-LM are Stage1.modelsBc, one per SparkContext. Same weak-key
+  // + isStopped-eviction discipline as pipeCache.
   private val bcCache = new java.util.WeakHashMap[SparkSession,
     scala.collection.mutable.HashMap[String, Any]]()
   private[graft] def cachedBc[T](s: SparkSession, key: String)(mk: => T): T =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Pipeline
 import graft.SparkEntry.pipe
 import graft.codec.{Audio, Fft}
+import graft.lid.LidModels
 import graft.lid.TextStats.roundTo
 import graft.model.Stage1Row
 import graft.operators.{Stage1b, Stage2, SynthCascade}
@@ -30,7 +31,7 @@ object PipelineQueries extends Queries {
     * row-scalar fields; `preds` one row per present (doc, system) with
     * its top-1 (lang, prob). */
   private val synthRowsSql: String =
-    """base AS (
+    s"""base AS (
          SELECT doc_id AS id,
            'd' || doc_id AS clip_id,
            's' || (doc_id % 4) AS source,
@@ -48,7 +49,7 @@ object PipelineQueries extends Queries {
          FROM documents),
        sysc AS (
          SELECT j,
-           ['impresso_ft','wp_ft','langid_nb','langdetect_nb','lingua_rank','impresso_lp'][CAST(j AS INT) + 1] AS lid,
+           ${LidModels.Names.mkString("['", "','", "']")}[CAST(j AS INT) + 1] AS lid,
            [1,3,5,7,9,11][CAST(j AS INT) + 1] AS pj,
            [5,11,17,23,31,41][CAST(j AS INT) + 1] AS lj,
            [7,13,19,29,43,53][CAST(j AS INT) + 1] AS kj

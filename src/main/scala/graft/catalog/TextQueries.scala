@@ -241,13 +241,12 @@ object TextQueries extends Queries {
       // (the LM is not SQL-expressible); tier ordering proven below by
       // construction of ntile.
       import s.implicits._
-      val bcLm = cachedBc(s, "charlm")(
-        s.sparkContext.broadcast(graft.lid.LidModels.default.charLm))
+      val bc = graft.operators.Stage1.modelsBc(s.sparkContext)
       val scored = Dedup.fanOut(t(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("text")))
         .as[(Long, String, String)]
         .map { case (id, lang, text) =>
-          (id, lang, TextStats.roundTo(bcLm.value.perplexity(text), 4))
+          (id, lang, TextStats.roundTo(bc.value.charLm.perplexity(text), 4))
         }.toDF("doc_id", "lang", "ppl")
       val win = Window.partitionBy(col("lang"))
         .orderBy(col("ppl").asc, col("doc_id").asc)

@@ -10,11 +10,19 @@ import scala.util.Random
   *    prob floor 0.05, clamp min(1, round(p,3)) — LI:169-195)
   *  - [[NaiveBayesLid]]    ~ `langid` (char-n-gram multinomial NB with
   *    normalized probabilities — LI:293-295, 368-382)
+  *  - [[SampledNbLid]]     ~ `langdetect` (averaged sampled-NB trials with
+  *    the early stop — LI:131-166)
   *  - [[RankLid]]          ~ `lingua` (trigram rank-profile, out-of-place
   *    measure → confidence > 0.05 kept — LI:303-307, 422-439)
+  *  - [[ProtoLid]]         ~ `impresso_langident_pipeline` (nearest
+  *    centroid — LI:401-420)
   *  - [[CharLm]]           — graft addition: KenLM-style interpolated char
   *    n-gram LM for per-transcript perplexity (BASELINE.json.north_star).
   *
+  * The gram tables share one key, [[Grams.key]], and one open-addressed
+  * layout, [[LongSlots]], whose flat payload has an extra row past the
+  * last slot for unseen grams; the two NB members share one [[NbTable]].
+  * [[LidModels.Names]] is the one list of the six system names.
   * All models are trained deterministically in-memory from
   * [[LangCorpus.trainingCorpus]] (the reference's binaries are LFS stubs;
   * its impresso model was itself trained on ~2k items, README.md:37-39).
@@ -164,11 +172,25 @@ object Detectors {
   }
 }
 
-/** Read-only open-addressed table from a non-zero packed-gram key to a
+/** The one packed key of a char n-gram, n <= 3: 16 bits per UTF-16
+  * char in bits 0-47, the gram length n in bits 48 and up. Injective for
+  * every input, NUL included; never 0 for n >= 1 (the empty gram is 0);
+  * for equal n, key order is string order. */
+private[lid] object Grams {
+  def key(s: String, from: Int, until: Int): Long = {
+    var key = 0L
+    var i = from
+    while (i < until) { key = (key << 16) | s.charAt(i); i += 1 }
+    key | ((until - from).toLong << 48)
+  }
+}
+
+/** Read-only open-addressed table from a non-zero [[Grams.key]] to a
   * slot: the model tables keep their per-class payload flat in a
   * primitive array at `slot * k`, so a gram lookup is one probe and no
-  * boxed key or per-gram array. Load factor <= 0.5; 0 marks an empty
-  * slot. */
+  * boxed key or per-gram array. An absent key maps to `capacity`, the
+  * row past the last slot, where each table keeps its unseen-gram
+  * payload. Load factor <= 0.5; 0 marks an empty slot. */
 private[lid] final class LongSlots(keySet: Iterable[Long]) extends Serializable {
   private val bits = {
     var b = 4
@@ -189,12 +211,12 @@ private[lid] final class LongSlots(keySet: Iterable[Long]) extends Serializable 
     keys(s) = key
   }
 
-  /** The key's slot, or -1 when absent. */
+  /** The key's slot, or `capacity` (the unseen row) when absent. */
   def slot(key: Long): Int = {
     var s = home(key)
     var k = keys(s)
     while (k != 0L && k != key) { s = (s + 1) & mask; k = keys(s) }
-    if (k == 0L) -1 else s
+    if (k == 0L) capacity else s
   }
 }
 
@@ -279,73 +301,29 @@ final class HashedLinearLid(
   * normalized posterior probabilities (norm_probs=True analog). */
 final class NaiveBayesLid(val langs: Vector[String]) extends LangDetector {
   private val k = langs.length
-  // gram (chars packed into a length-tagged Long) → slot; the slot's
-  // per-class log-likelihoods sit at logLik(slot * k + c)
-  private var slots: LongSlots = _
-  private var logLik: Array[Double] = _
-  private val defaults = new Array[Double](k)
+  private var table: NbTable = _
 
-  private def packGram(t: String, i: Int, n: Int): Long =
-    if (n == 1) (1L << 32) | t.charAt(i).toLong
-    else (2L << 32) | (t.charAt(i).toLong << 16) | t.charAt(i + 1).toLong
-
-  /** Gram keys are 1- and 2-char substrings of the lowercased text.
-    * Enumerated inline in train/predict to avoid iterator allocation. */
   def train(corpus: Seq[(String, String)]): this.type = {
-    val idx = langs.zipWithIndex.toMap
-    val counts = Array.fill(k)(new scala.collection.mutable.LongMap[Int])
-    val totals = new Array[Long](k)
-    corpus.foreach { case (l, s) =>
-      idx.get(l).foreach { y =>
-        val t = s.toLowerCase
-        var n = 1
-        while (n <= 2) {
-          var i = 0
-          while (i + n <= t.length) {
-            val g = packGram(t, i, n)
-            counts(y)(g) = counts(y).getOrElse(g, 0) + 1
-            totals(y) += 1
-            i += 1
-          }
-          n += 1
-        }
-      }
-    }
-    val vocab = counts.iterator.flatMap(_.keysIterator).toSet
-    val vocabSize = vocab.size.toDouble
-    var c = 0
-    while (c < k) {
-      defaults(c) = math.log(1.0 / (totals(c) + vocabSize))
-      c += 1
-    }
-    slots = new LongSlots(vocab)
-    logLik = NbTables.flat(slots, vocab, counts, totals, vocabSize)
+    table = NbTable(langs, corpus, maxOrder = 2)
     this
   }
 
   override def score(in: LidText): Array[(String, Double)] = {
     if (in.text == null || in.text.isEmpty) return Array.empty
     val scores = new Array[Double](k)
-    var any = false
+    val logLik = table.logLik
     val t = in.lower
     var n = 1
     while (n <= 2) {
       var i = 0
       while (i + n <= t.length) {
-        any = true
-        val s = slots.slot(packGram(t, i, n))
+        val base = table.row(Grams.key(t, i, i + n))
         var c = 0
-        if (s >= 0) {
-          val base = s * k
-          while (c < k) { scores(c) += logLik(base + c); c += 1 }
-        } else {
-          while (c < k) { scores(c) += defaults(c); c += 1 }
-        }
+        while (c < k) { scores(c) += logLik(base + c); c += 1 }
         i += 1
       }
       n += 1
     }
-    if (!any) return Array.empty
     // temper by length so probs aren't saturated 0/1 on long text
     val len = math.max(1, in.text.length)
     val p = Detectors.softmax(scores.map(_ / math.sqrt(len.toDouble)))
@@ -375,55 +353,13 @@ final class SampledNbLid(
 
   require(trials <= 8, "trial coins are carved from one 64-bit mix")
   private val k = langs.length
-  // same flat gram table as NaiveBayesLid: logLik(slot * k + c)
-  private var slots: LongSlots = _
-  private var logLik: Array[Double] = _
-  private val defaults = new Array[Double](k)
+  private var table: NbTable = _
   private val keepByte = (keepRate * 256).toInt // per-trial coin: byte < this
   private val earlyIdx = langs.zipWithIndex
     .filter(li => earlyStopLangs.contains(li._1)).map(_._2).toArray
 
-  // order tag OR'd AFTER the char loop: tagging first and shifting per
-  // char pushed the tag past bit 63, so NUL-led grams of different
-  // orders shared keys (n <= 3 chars use bits 0-47; the tag sits at
-  // 48+). Identical keys for NUL-free text, so trained behavior is
-  // unchanged there.
-  private def packGram(t: String, i: Int, n: Int): Long = {
-    var key = 0L
-    var j = i
-    while (j < i + n) { key = (key << 16) | t.charAt(j); j += 1 }
-    key | (n.toLong << 48)
-  }
-
   def train(corpus: Seq[(String, String)]): this.type = {
-    val idx = langs.zipWithIndex.toMap
-    val counts = Array.fill(k)(new scala.collection.mutable.LongMap[Int])
-    val totals = new Array[Long](k)
-    corpus.foreach { case (l, s) =>
-      idx.get(l).foreach { y =>
-        val t = s.toLowerCase
-        var n = 1
-        while (n <= 3) {
-          var i = 0
-          while (i + n <= t.length) {
-            val g = packGram(t, i, n)
-            counts(y)(g) = counts(y).getOrElse(g, 0) + 1
-            totals(y) += 1
-            i += 1
-          }
-          n += 1
-        }
-      }
-    }
-    val vocab = counts.iterator.flatMap(_.keysIterator).toSet
-    val vocabSize = vocab.size.toDouble
-    var c = 0
-    while (c < k) {
-      defaults(c) = math.log(1.0 / (totals(c) + vocabSize))
-      c += 1
-    }
-    slots = new LongSlots(vocab)
-    logLik = NbTables.flat(slots, vocab, counts, totals, vocabSize)
+    table = NbTable(langs, corpus, maxOrder = 3)
     this
   }
 
@@ -438,15 +374,14 @@ final class SampledNbLid(
     if (in.text == null || in.text.isEmpty) return Array.empty
     val t = in.lower // LI:158 lowercase pre-norm
     val scores = Array.ofDim[Double](trials, k)
+    val logLik = table.logLik
     var any = false
     var n = 1
     while (n <= 3) {
       var i = 0
       while (i + n <= t.length) {
-        val g = packGram(t, i, n)
-        val slot = slots.slot(g)
-        val v = if (slot >= 0) logLik else defaults
-        val base = if (slot >= 0) slot * k else 0
+        val g = Grams.key(t, i, i + n)
+        val base = table.row(g)
         val coins = coinWord(g)
         var tr = 0
         while (tr < trials) {
@@ -454,7 +389,7 @@ final class SampledNbLid(
             any = true
             val s = scores(tr)
             var c = 0
-            while (c < k) { s(c) += v(base + c); c += 1 }
+            while (c < k) { s(c) += logLik(base + c); c += 1 }
           }
           tr += 1
         }
@@ -495,25 +430,52 @@ final class SampledNbLid(
   }
 }
 
-/** Flat per-class log-likelihood table shared by the two NB members:
-  * slot s of `slots` holds class c's add-one smoothed log-likelihood at
-  * s * k + c (the same expression the per-gram arrays held). */
-private[lid] object NbTables {
-  def flat(slots: LongSlots, vocab: Iterable[Long],
-      counts: Array[scala.collection.mutable.LongMap[Int]], totals: Array[Long],
-      vocabSize: Double): Array[Double] = {
-    val k = counts.length
-    val out = new Array[Double](slots.capacity * k)
-    vocab.foreach { g =>
-      val base = slots.slot(g) * k
+/** The gram table of the two NB members: char 1..`maxOrder`-grams of
+  * the lower-cased training text. Class c's add-one smoothed
+  * log-likelihood of a gram sits at `logLik(row(key) + c)`; an unseen
+  * gram's row is the one past the last slot, which holds each class's
+  * default log(1 / (total_c + |V|)). */
+private[lid] final class NbTable(k: Int, slots: LongSlots, val logLik: Array[Double])
+    extends Serializable {
+  def row(key: Long): Int = slots.slot(key) * k
+}
+
+private[lid] object NbTable {
+  def apply(langs: Vector[String], corpus: Seq[(String, String)], maxOrder: Int): NbTable = {
+    val k = langs.length
+    val idx = langs.zipWithIndex.toMap
+    val counts = Array.fill(k)(new scala.collection.mutable.LongMap[Int])
+    val totals = new Array[Long](k)
+    corpus.foreach { case (l, s) =>
+      idx.get(l).foreach { y =>
+        val t = s.toLowerCase
+        var n = 1
+        while (n <= maxOrder) {
+          var i = 0
+          while (i + n <= t.length) {
+            val g = Grams.key(t, i, i + n)
+            counts(y)(g) = counts(y).getOrElse(g, 0) + 1
+            totals(y) += 1
+            i += 1
+          }
+          n += 1
+        }
+      }
+    }
+    val vocab = counts.iterator.flatMap(_.keysIterator).toSet
+    val vocabSize = vocab.size.toDouble
+    val slots = new LongSlots(vocab)
+    val logLik = new Array[Double]((slots.capacity + 1) * k)
+    def fill(slot: Int, count: Int => Int): Unit = {
       var c = 0
       while (c < k) {
-        out(base + c) = math.log(
-          (counts(c).getOrElse(g, 0) + 1.0) / (totals(c) + vocabSize))
+        logLik(slot * k + c) = math.log((count(c) + 1.0) / (totals(c) + vocabSize))
         c += 1
       }
     }
-    out
+    vocab.foreach(g => fill(slots.slot(g), counts(_).getOrElse(g, 0)))
+    fill(slots.capacity, _ => 0) // the unseen row
+    new NbTable(k, slots, logLik)
   }
 }
 
@@ -522,17 +484,13 @@ private[lid] object NbTables {
   * entries with confidence > 0.05 (LI:434). */
 final class RankLid(val langs: Vector[String], topM: Int = 300) extends LangDetector {
   private val k = langs.length
-  // trigram (3 chars packed 16 bits each) → slot; the slot's
-  // per-language ranks sit at ranks(slot * k + j). A gram outside a
-  // language's top-M profile ranks topM. For equal-length trigrams the
-  // packed-long order equals the string lexicographic order, so the
-  // training tie-break (-count, gram) is the string one.
+  // trigram key → slot; the slot's per-language ranks sit at
+  // ranks(slot * k + j). A gram outside a language's top-M profile, or
+  // unseen (the row past the last slot), ranks topM. Trigram key order
+  // is string order, so the training tie-break (-count, gram) is the
+  // string one.
   private var slots: LongSlots = _
   private var ranks: Array[Int] = _
-
-  private def pack3(t: String, i: Int): Long =
-    (t.charAt(i).toLong << 32) | (t.charAt(i + 1).toLong << 16) |
-      t.charAt(i + 2).toLong
 
   def train(corpus: Seq[(String, String)]): this.type = {
     val gramRanks = new scala.collection.mutable.LongMap[Array[Int]]
@@ -542,7 +500,7 @@ final class RankLid(val langs: Vector[String], topM: Int = 300) extends LangDete
         val t = new LidText(s).padded
         var i = 0
         while (i <= t.length - 3) {
-          val g = pack3(t, i)
+          val g = Grams.key(t, i, i + 3)
           counts(g) = counts.getOrElse(g, 0) + 1
           i += 1
         }
@@ -553,7 +511,7 @@ final class RankLid(val langs: Vector[String], topM: Int = 300) extends LangDete
       }
     }
     slots = new LongSlots(gramRanks.keys)
-    ranks = new Array[Int](slots.capacity * k)
+    ranks = Array.fill((slots.capacity + 1) * k)(topM)
     gramRanks.foreach { case (g, v) =>
       System.arraycopy(v, 0, ranks, slots.slot(g) * k, k)
     }
@@ -567,14 +525,9 @@ final class RankLid(val langs: Vector[String], topM: Int = 300) extends LangDete
     val dist = new Array[Long](k)
     var i = 0
     while (i <= t.length - 3) {
-      val s = slots.slot(pack3(t, i))
+      val base = slots.slot(Grams.key(t, i, i + 3)) * k
       var j = 0
-      if (s < 0) {
-        while (j < k) { dist(j) += topM; j += 1 }
-      } else {
-        val base = s * k
-        while (j < k) { dist(j) += ranks(base + j); j += 1 }
-      }
+      while (j < k) { dist(j) += ranks(base + j); j += 1 }
       i += 1
     }
     val maxDist = topM.toDouble * nGrams
@@ -680,11 +633,13 @@ final class ProtoLid(val langs: Vector[String], dim: Int = 1 << 13,
   * and out-of-family text scores high — the stage-1 quality signal. */
 final class CharLm(orderWeights: Array[Double] = Array(0.1, 0.3, 0.6))
     extends Serializable {
+  require(1 to 3 contains orderWeights.length,
+    s"${orderWeights.length} orders: a gram key holds 1 to 3 chars")
   private val maxOrder = orderWeights.length
-  // n-grams keyed by packed chars (16 bits each, length tag in the top
-  // bits) — zero substring allocation on the per-char scoring path.
-  // LongMap (specialized open-addressing) avoids boxing a java.lang.Long
-  // on every one of the 6 lookups per scored character.
+  // n-grams and contexts keyed by Grams.key (the empty context is 0) —
+  // zero substring allocation on the per-char scoring path. LongMap
+  // (specialized open-addressing) avoids boxing a java.lang.Long on
+  // every one of the 6 lookups per scored character.
   private val counts = new scala.collection.mutable.LongMap[Int]
   private val contexts = new scala.collection.mutable.LongMap[Int]
   private var charVocab = 64.0
@@ -699,19 +654,6 @@ final class CharLm(orderWeights: Array[Double] = Array(0.1, 0.3, 0.6))
   private var triSlots = new LongSlots(Nil)
   private var triLogP: Array[Double] = new Array[Double](triSlots.capacity)
 
-  /** Pack s[from..until) (until-from <= 3) into a tagged Long key.
-    * The length tag (empty ctx = 1) is OR'd after the char loop — chars
-    * occupy bits 0-47, the tag bits 48+; tagging before shifting pushed
-    * the tag out of the word for non-empty grams, letting NUL-led grams
-    * of different orders collide (keys are unchanged for NUL-free
-    * text). */
-  private def pack(s: CharSequence, from: Int, until: Int): Long = {
-    var key = 0L
-    var i = from
-    while (i < until) { key = (key << 16) | s.charAt(i); i += 1 }
-    key | ((until - from + 1).toLong << 48)
-  }
-
   def train(corpus: Seq[String]): this.type = {
     val seen = new scala.collection.mutable.HashSet[Char]
     corpus.foreach { s0 =>
@@ -721,9 +663,9 @@ final class CharLm(orderWeights: Array[Double] = Array(0.1, 0.3, 0.6))
       while (n <= maxOrder) {
         var i = 0
         while (i + n <= s.length) {
-          val g = pack(s, i, i + n)
+          val g = Grams.key(s, i, i + n)
           counts(g) = counts.getOrElse(g, 0) + 1
-          val ctx = pack(s, i, i + n - 1)
+          val ctx = Grams.key(s, i, i + n - 1)
           contexts(ctx) = contexts.getOrElse(ctx, 0) + 1
           i += 1
         }
@@ -732,10 +674,10 @@ final class CharLm(orderWeights: Array[Double] = Array(0.1, 0.3, 0.6))
     }
     charVocab = math.max(seen.size.toDouble, 16.0)
     // precompute the interpolated probability for every trained trigram
-    // (tag 4 = 3-char keys; see pack): reconstruct the window and run
+    // (length tag 3): reconstruct the window and run
     // the exact slow-path arithmetic once per distinct trigram
     if (maxOrder == 3) {
-      val tri = counts.keys.filter(k2 => (k2 >>> 48) == 4)
+      val tri = counts.keys.filter(k2 => (k2 >>> 48) == 3)
       triSlots = new LongSlots(tri)
       triLogP = new Array[Double](triSlots.capacity)
       tri.foreach { key =>
@@ -755,8 +697,8 @@ final class CharLm(orderWeights: Array[Double] = Array(0.1, 0.3, 0.6))
   private def condProb(s: String, i: Int, order: Int): Double = {
     val from = i - order + 1
     if (from < 0) return 1.0 / charVocab
-    val c = counts.getOrElse(pack(s, from, i + 1), 0)
-    val cc = contexts.getOrElse(pack(s, from, i), 0)
+    val c = counts.getOrElse(Grams.key(s, from, i + 1), 0)
+    val cc = contexts.getOrElse(Grams.key(s, from, i), 0)
     (c + 0.5) / (cc + 0.5 * charVocab)
   }
 
@@ -774,16 +716,16 @@ final class CharLm(orderWeights: Array[Double] = Array(0.1, 0.3, 0.6))
   private def perplexityImpl(in: LidText, cached: Boolean): Double = {
     if (in.text == null || in.text.isEmpty) return 1e6
     val s = "" + in.lower + ""
+    val tri = triSlots
+    val miss = tri.capacity
     var logSum = 0.0
     var i = 1
     while (i < s.length) {
       // hot path: one packed-window key + one lookup per char (i >= 2);
       // positions with truncated context and cache misses (untrained
       // trigrams) take the exact slow path
-      val slot = if (cached && i >= 2) triSlots.slot((4L << 48) |
-        (s.charAt(i - 2).toLong << 32) | (s.charAt(i - 1).toLong << 16) | s.charAt(i))
-      else -1
-      if (slot >= 0) logSum += triLogP(slot)
+      val slot = if (cached && i >= 2) tri.slot(Grams.key(s, i - 2, i + 1)) else miss
+      if (slot < miss) logSum += triLogP(slot)
       else {
         var p = 0.0
         var o = 1
@@ -810,19 +752,19 @@ final case class LidModels(
     impressoLp: ProtoLid,
     charLm: CharLm) extends Serializable {
 
-  /** System name → detector — SIX systems, the reference's full ensemble
-    * breadth (langdetect, langid, impresso_ft, wp_ft,
-    * impresso_langident_pipeline, lingua — LI:761-785). */
-  def systems: Seq[(String, LangDetector)] = Seq(
-    "impresso_ft" -> impressoFt,
-    "wp_ft" -> wpFt,
-    "langid_nb" -> langidNb,
-    "langdetect_nb" -> langdetectNb,
-    "lingua_rank" -> linguaRank,
-    "impresso_lp" -> impressoLp)
+  /** System name → detector, in [[LidModels.Names]] order. */
+  def systems: Seq[(String, LangDetector)] = LidModels.Names.zip(
+    Seq(impressoFt, wpFt, langidNb, langdetectNb, linguaRank, impressoLp))
 }
 
 object LidModels {
+  /** The SIX system names, the reference's full ensemble breadth
+    * (impresso_ft, wp_ft, langid, langdetect, lingua,
+    * impresso_langident_pipeline — LI:761-785), in the order of the
+    * `Stage1Row` prediction fields. */
+  val Names: Seq[String] = Seq("impresso_ft", "wp_ft", "langid_nb", "langdetect_nb",
+    "lingua_rank", "impresso_lp")
+
   lazy val default: LidModels = {
     val corpus = LangCorpus.trainingCorpus()
     // wp_ft analog: same architecture, independently seeded/shaped model

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import graft.lid.TextStats
+import graft.lid.{LidModels, TextStats}
 import graft.model._
 
 /** Stage 1b — per-source statistics (= `lib/newspaper_statistics.py`,
@@ -31,22 +31,17 @@ object Stage1b {
       minVoteScore: Double = Thresholds.MinimalVoteScore,
       admissible: Set[String] = null)
 
-  val LidNames: Seq[String] =
-    Seq("impresso_ft", "wp_ft", "langid_nb", "langdetect_nb",
-      "lingua_rank", "impresso_lp")
-
-  /** (name, predictions) pairs of every LID system on a row — the single
-    * place the system list is enumerated for voting/stats/diagnostics. */
-  def systemsOf(r: Stage1Row): Seq[(String, Array[LangProb])] = Seq(
-    "impresso_ft" -> r.impresso_ft, "wp_ft" -> r.wp_ft,
-    "langid_nb" -> r.langid_nb, "langdetect_nb" -> r.langdetect_nb,
-    "lingua_rank" -> r.lingua_rank, "impresso_lp" -> r.impresso_lp)
+  /** (name, predictions) pairs of every LID system on a row, named by
+    * [[LidModels.Names]] — the one place the row's prediction fields are
+    * listed for voting/stats/diagnostics. */
+  def systemsOf(r: Stage1Row): Seq[(String, Array[LangProb])] = LidModels.Names.zip(Seq(
+    r.impresso_ft, r.wp_ft, r.langid_nb, r.langdetect_nb, r.lingua_rank, r.impresso_lp))
 
   // A4/A8 counter rows: the six systems, then the orig_lg and ensemble
   // pseudo-systems
   private val CountedLids: IndexedSeq[String] =
-    (LidNames :+ "orig_lg" :+ "ensemble").toVector
-  private val OrigIdx = LidNames.size
+    (LidModels.Names :+ "orig_lg" :+ "ensemble").toVector
+  private val OrigIdx = LidModels.Names.size
   private val EnsIdx = OrigIdx + 1
 
   private type Counts = scala.collection.mutable.HashMap[String, Long]
@@ -140,7 +135,7 @@ object Stage1b {
     val domCnt = ensDist.values.maxOption.getOrElse(0L)
     SourceStats(
       source = source,
-      lids = LidNames,
+      lids = LidModels.Names,
       boosted_lids = p.boostedLids.toSeq.sorted,
       boost_factor = p.boostFactor,
       admissible_languages = Option(p.admissible).map(_.toSeq.sorted).orNull,

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.lid.LidModels
 import graft.model._
 
 /** Stage 2 — the per-row decision cascade fused with the graft keep/drop
@@ -33,7 +34,7 @@ object Stage2 {
 
   /** Empty stats for sources unseen by stage 1b (cold start). */
   def emptyStats(source: String): SourceStats = SourceStats(
-    source, Stage1b.LidNames, Thresholds.BoostedLids.toSeq.sorted,
+    source, LidModels.Names, Thresholds.BoostedLids.toSeq.sorted,
     Thresholds.BoostFactor, null, null, 0.0, None, 0L,
     Map.empty, Map.empty, Map.empty, Map.empty, Map.empty, 0L,
     Thresholds.FixedTs)

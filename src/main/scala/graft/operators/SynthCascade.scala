@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.lid.LidModels
 import graft.model.{LangProb, SourceStats, Stage1Row, StatsVersion}
 
 /** SQL-reproducible synthetic inputs for the §2.9 decision cascade and
@@ -27,7 +28,7 @@ object SynthCascade {
 
   val Langs: IndexedSeq[String] = Vector("de", "en", "fr", "it", "lb", "pt")
 
-  // per-system constants, index order = Stage1b.LidNames
+  // per-system constants, index order = LidModels.Names
   private val Pj = Array(1L, 3L, 5L, 7L, 9L, 11L) // presence
   private val Lj = Array(5L, 11L, 17L, 23L, 31L, 41L) // language
   private val Kj = Array(7L, 13L, 19L, 29L, 43L, 53L) // probability
@@ -83,7 +84,7 @@ object SynthCascade {
     "it" -> 0.3, "lb" -> 0.8, "pt" -> 0.4)
 
   private def supportMap(zeroAll: Boolean): Map[String, Map[String, Double]] =
-    Stage1b.LidNames.map { lid =>
+    LidModels.Names.map { lid =>
       lid -> SupportByLang.map { case (lang, s) =>
         // the zero-support vote kill (EL:416-417): langid_nb never
         // supports "it" — votes for it through langid_nb vanish
@@ -96,7 +97,7 @@ object SynthCascade {
     Map("ensemble" -> langs.map(_ -> 0.1).toMap) // membership-only for 2b
 
   private def base(source: String): SourceStats = SourceStats(
-    source, Stage1b.LidNames, Thresholds.BoostedLids.toSeq.sorted,
+    source, LidModels.Names, Thresholds.BoostedLids.toSeq.sorted,
     Thresholds.BoostFactor, null, null, 0.0, None, 100L,
     Map.empty, Map.empty, Map.empty, Map.empty, Map.empty, 0L,
     Thresholds.FixedTs)

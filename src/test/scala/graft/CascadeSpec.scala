@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.lid.LidModels
 import graft.operators._
 import graft.operators.Votes.Top1
 import graft.model._
@@ -65,7 +66,7 @@ class VotesSpec extends AnyFunSuite {
         "lingua_rank" -> Map("de" -> 0.9, "fr" -> 0.9)),
       dominant: String = "de",
       ratio: Double = 0.7) = SourceStats(
-    "s", Stage1b.LidNames, Seq("impresso_ft", "orig_lg"), 1.5, null,
+    "s", LidModels.Names, Seq("impresso_ft", "orig_lg"), 1.5, null,
     dominant, ratio, Some(0.9), 100L,
     Map("ensemble" -> Map("de" -> 0.7, "fr" -> 0.2, "lb" -> 0.1)),
     Map.empty, support, Map.empty, Map.empty, 80L, "ts")
@@ -301,7 +302,7 @@ object VotesFixtures {
         "wp_ft" -> Map("de" -> 0.9, "fr" -> 0.9, "lb" -> 0.9),
         "langid_nb" -> Map("de" -> 0.9, "fr" -> 0.9, "lb" -> 0.9),
         "lingua_rank" -> Map("de" -> 0.9, "fr" -> 0.9, "lb" -> 0.9))): SourceStats =
-    SourceStats("src99", Stage1b.LidNames, Seq("impresso_ft", "orig_lg"),
+    SourceStats("src99", LidModels.Names, Seq("impresso_ft", "orig_lg"),
       1.5, null, dominant, ratio, origSupport, 100L,
       Map("ensemble" -> Map("de" -> 0.6, "fr" -> 0.3, "lb" -> 0.1)),
       Map.empty, support, Map.empty, Map.empty, 80L, "ts")

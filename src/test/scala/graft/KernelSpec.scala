@@ -79,6 +79,34 @@ class KernelSpec extends AnyFunSuite {
     assert(digest == "6360784f8547f23b740bd46ca53742ee6cfc81b6efcf779e7ba5ac45ab2444f3", digest)
   }
 
+  /** Strings ClipGen never produces, aimed at the packed gram keys: NUL
+    * and `\u0001` (the pad char) leading or inside grams of every order,
+    * the largest char, lone and paired surrogates, texts of 0 to 4
+    * chars, `İ` and a final `Σ` (lower-casing changes their length) and
+    * digit-only text. */
+  private val keyTexts = Seq(
+    null, "", "a", "ab", "abc", "abcd", "\u0000", "\u0000\u0000", "\u0000\u0000\u0000",
+    "\u0000a", "a\u0000", "\u0000ab", "\u0000\u0000a", "a\u0000\u0000b", "\u0001",
+    "\u0001\u0001", "\u0001a\u0001", "\u0000\u0001\u0002", "\uffff", "\uffff\uffff\uffff",
+    "\ud835", "\udc00", "\ud835\udc00", "x\ud835\udc00y", "\udc00\ud835", "\ud83d\ude00\ud83d\ude00",
+    "İ", "İİ", "İstanbul", "Σ", "ΟΔΟΣ", "ΑΣ ΣΑ", "0", "12", "123", "2024 1999",
+    "00000000", "der\u0000die das", "le\u0001la")
+
+  test("kernel golden: six detectors + char-LM perplexity over gram-key edge strings") {
+    val digest = sha { md =>
+      keyTexts.foreach { t =>
+        models.systems.foreach { case (name, det) =>
+          putStr(md, name)
+          val preds = det.predict(t)
+          md.update(preds.length.toByte)
+          preds.foreach { case (l, p) => putStr(md, l); putDouble(md, p) }
+        }
+        putDouble(md, models.charLm.perplexity(t))
+      }
+    }
+    assert(digest == "b729417552de5c9cea5b9b2792030da398c2db4e773a7aaf17ac61502b3d749e", digest)
+  }
+
   private def forAll[T](g: Gen[T], n: Int)(check: T => Unit): Unit = {
     var seed = org.scalacheck.rng.Seed(20261017L)
     var i = 0
